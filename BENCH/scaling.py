@@ -97,7 +97,7 @@ def run_one(cpus: int) -> dict:
     # Two shuffle-sizing modes:
     #   * fixed (default 64): identical plan at every parallelism level,
     #     AQE coalesces for the smaller core counts — the config every
-    #     pre-round-8 figure (and the witness floors) was taken under;
+    #     pre-round-8 figure was taken under;
     #   * per-core (SPARK_GRAFT_SHUFFLE_PER_CORE=K): partitions = K*cpus,
     #     i.e. each level runs the config a real cluster of that size
     #     would (partitions ~ 2-16x total cores).  Round-8 A/B
@@ -105,9 +105,7 @@ def run_one(cpus: int) -> dict:
     #     wall is 264 s at 64 partitions vs 117 s at 512 in the SAME
     #     window — at 64 the level-3 clique join runs 2 task waves whose
     #     stragglers idle most of the socket, so the fixed-64 comparison
-    #     understates wide-level scaling by >2x.  Per-core mode is a
-    #     non-default workload: witness floors are disabled and every
-    #     leg must pass the strict control sandwich.
+    #     understates wide-level scaling by >2x.
     shuffle = shuffle_partitions_for(cpus, os.environ)
     spark = eng.get_spark(
         f"local[{cpus}]",
@@ -157,187 +155,32 @@ def run_one(cpus: int) -> dict:
     return out
 
 
-#: historical best steady walls for the default 2M-instance workload,
-#: measured across rounds 2-6 with in-round controls (BENCH/BASELINE.md
-#: throughput table: t2 348.8-378.0 s, t8 96.1-103.5 s over five
-#: independent invocations).  A wall within WITNESS_TOL of the best is
-#: self-evidencing: a hypervisor wave *inflates* compute walls, so a
-#: leg that lands at its historical steady floor provably ran in a
-#: clean window — regardless of what the bracketing controls (taken
-#: minutes before/after) saw.  Witness refs are only defined for the
-#: default workload; ANY workload-affecting env override (input dir,
-#: replication, distance, plan, partitioning) falls back to the strict
-#: control-sandwich path — a smaller/faster workload would otherwise
-#: self-accept mid-wave walls against floors it has no relation to.
-_DEFAULT_WORKLOAD = (
-    REP == 20
-    and D == 1.0
-    and MAX_K == 3
-    and SF_DIR == "/root/testdata/sf0.1"
-    and os.environ.get("SPARK_GRAFT_SCALE_PLAN", "subtree") == "subtree"
-    and os.environ.get("SPARK_GRAFT_SHUFFLE", "64") == "64"
-    # validated parse: an invalid per-core value falls back to fixed
-    # sizing, so the leg genuinely runs the default workload
-    and per_core_shuffle(os.environ) is None
-    and not os.environ.get("SPARK_GRAFT_SCALE_EXTRA")
-)
-
-#: the mining-path files whose speed determines the workload's wall —
-#: the witness floors are only valid while this code is not FASTER than
-#: the rounds that set them (a faster miner could ride a stale floor
-#: through a wave and self-accept a dirty window as "steady").
-_ENG = (
-    "efficient_co_location_pattern_mining_in_large_spatial_datasets"
-    "_with_rare_features_spark"
-)
-MINING_PATH_FILES = [
-    f"{_ENG}/plans/miner.py",
-    f"{_ENG}/operators/pairs.py",
-    f"{_ENG}/operators/stars.py",
-    f"{_ENG}/operators/cells.py",
-    # transitive hot-path deps the wall also tracks: the miner's
-    # per-level WPI/measure aggregation and the subtree plan's bucketed
-    # edge persistence — a 2x-faster measures.py would shift the floors
-    # exactly like a miner.py edit (all six byte-identical since the
-    # round-6 measurements that set the floors, so widening the anchor
-    # does not invalidate them)
-    f"{_ENG}/functions/measures.py",
-    f"{_ENG}/sources/bucketed.py",
-]
-
-
-def mining_path_hash(repo: str | None = None) -> str:
-    """16-hex-digit sha256 over the concatenated mining-path sources."""
-    import hashlib
-
-    if repo is None:  # the repo root is BENCH/'s parent, wherever cloned
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    h = hashlib.sha256()
-    for rel in MINING_PATH_FILES:
-        with open(os.path.join(repo, rel), "rb") as f:
-            h.update(f.read())
-    return h.hexdigest()[:16]
-
-
-def _safe_mining_path_hash() -> str | None:
-    """mining_path_hash, degraded to None when a source file is absent."""
-    try:
-        return mining_path_hash()
-    except OSError:
-        return None
-
-
-def _load_witness_refs(
-    default_workload: bool,
-    floors_path: str | None = None,
-    current_hash: str | None = None,
-) -> tuple[dict, str | None]:
-    """(witness floors, disabled-reason) — floors are usable only when
-    BOTH preconditions hold (round-7 verdict #4 mechanized):
-
-    1. the workload is the default one the floors were measured on;
-    2. the mining-path code hash matches the hash the floors were
-       anchored against (BENCH/witness_floors.json) — any mining-path
-       edit, however innocent-looking, disables the witness path until
-       the floors are re-anchored from sandwich-accepted runs.
-    """
-    if not default_workload:
-        return {}, "non-default workload (env overrides)"
-    if floors_path is None:
-        floors_path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "witness_floors.json"
-        )
-    # everything below degrades to a disabled-reason, never an import
-    # crash: a missing mining-path file or malformed floors file must
-    # disable the witness path, not kill the harness
-    try:
-        with open(floors_path) as f:
-            data = json.load(f)
-        pinned = data["mining_path_sha256_16"]
-        floors = {int(k): float(v) for k, v in data["floors_sec"].items()}
-        cur = current_hash if current_hash is not None else mining_path_hash()
-    except (OSError, ValueError, KeyError, TypeError) as exc:
-        return {}, f"witness floors unusable: {type(exc).__name__}: {exc}"
-    if cur != pinned:
-        return {}, (
-            f"mining-path hash {cur} != anchored {pinned}: the mining code "
-            "changed since the floors were anchored — re-anchor "
-            "witness_floors.json from sandwich-accepted runs before the "
-            "witness path is valid again"
-        )
-    return floors, None
-
-
-WITNESS_REF, WITNESS_DISABLED_REASON = _load_witness_refs(_DEFAULT_WORKLOAD)
-WITNESS_TOL = float(os.environ.get("SPARK_GRAFT_WITNESS_TOL", "0.12"))
-
-#: launch gate: require a clean relative overhead but tolerate a
-#: marginal absolute slowdown (<= this) going in.  Round-7 campaign
-#: data showed pre-control cleanliness does not predict run quality
-#: (two fully-clean launches measured 2-2.7x steady walls when a wave
-#: arrived mid-run) — only the wall itself witnesses the run, so the
-#: launch gate just avoids burning a leg inside an obvious deep wave.
-LAUNCH_ABS_TOL = float(os.environ.get("SPARK_GRAFT_LAUNCH_ABS_TOL", "0.35"))
-
 #: while this file exists, the campaign idles without consuming
 #: attempts — lets the builder run its own heavy jobs (pytest, bench)
 #: without polluting campaign windows.
 PAUSE_FILE = os.environ.get("SPARK_GRAFT_SCALE_PAUSE", "/tmp/scaling_pause")
 
 
-def decide_acceptance(
-    pre_clean: bool, post_clean: bool, wall: float, witness_ref: float | None,
-    witness_tol: float = None,
-) -> tuple[bool, str]:
+def decide_acceptance(pre_clean: bool, post_clean: bool) -> tuple[bool, str]:
     """Pure acceptance rule for one measured leg (unit-tested in
-    tests/test_scaling_harness.py — a silent regression here would
-    corrupt every future measurement round).
-
-    Accept iff (both bracketing controls clean) OR (the wall
-    self-witnesses: within ``witness_tol`` of the workload's historical
-    steady floor — waves only inflate compute walls, so a steady-floor
-    wall cannot contain one).  ``witness_ref=None`` (non-default
-    workload) disables the witness path entirely."""
-    if witness_tol is None:
-        witness_tol = WITNESS_TOL
+    tests/test_scaling_harness.py): accept iff both bracketing controls
+    were clean."""
     if pre_clean and post_clean:
         return True, "both controls clean"
-    bound = witness_ref * (1.0 + witness_tol) if witness_ref else None
-    if bound is not None and wall <= bound:
-        return True, (
-            f"witness wall {wall} <= {round(bound, 1)} "
-            f"(historical steady floor +{witness_tol:.0%})"
-        )
-    return False, "post-control dirty, wall not at steady floor"
+    return False, "a bracketing control was dirty"
 
 
 def _gated_leg(cpus: int, ctl_procs: int) -> dict:
     """One measurement attempt: pure-compute control -> leg -> control.
 
-    A leg is accepted on either of two grounds (recorded per attempt):
-      * ``controls`` — both bracketing controls clean (round-6 verdict
-        #1's original design: window provably open before AND after);
-      * ``witness-wall`` — the wall itself lands within WITNESS_TOL of
-        the workload's historical steady floor.  Waves only ever slow
-        compute, so a steady-floor wall cannot have been taken inside
-        one; this closes the round-7 failure mode where 4-7 minute legs
-        never fit between two clean 15-second control samples.
-    A dirty launch gate skips the (expensive) leg entirely and records
-    the rejected window."""
+    A leg is accepted when both bracketing controls are clean (the window
+    was open before AND after), so a dirty pre-control skips the
+    (expensive) leg entirely and records the rejected window."""
     from control import control  # sibling module (BENCH/control.py)
 
     attempt: dict = {"cpus": cpus, "ctl_pre": control(ctl_procs)}
     pre = attempt["ctl_pre"]
-    # marginal-compute launches are worth the gamble (the wall decides),
-    # but a bandwidth-starved window is a measured no-go: legs run
-    # 20-50% slow there and cannot witness, so launching is a
-    # guaranteed-rejected 4-7 minutes
-    launchable = pre["clean"] or (
-        pre["overhead"] <= pre["tol"]
-        and pre["abs_slowdown"] <= LAUNCH_ABS_TOL
-        and pre.get("bw_ok", True)
-    )
-    if not launchable:
+    if not pre["clean"]:
         attempt.update(run=None, accepted=False, reason="pre-control dirty")
         return attempt
     env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="48g")
@@ -363,13 +206,7 @@ def _gated_leg(cpus: int, ctl_procs: int) -> dict:
         )
         return attempt
     attempt["ctl_post"] = control(ctl_procs)
-    wall = attempt["run"]["wall_sec"]
-    ref = WITNESS_REF.get(cpus)
-    attempt["witness_ref_sec"] = ref
-    attempt["witness_bound_sec"] = round(ref * (1.0 + WITNESS_TOL), 1) if ref else None
-    accepted, reason = decide_acceptance(
-        pre["clean"], attempt["ctl_post"]["clean"], wall, ref
-    )
+    accepted, reason = decide_acceptance(pre["clean"], attempt["ctl_post"]["clean"])
     attempt.update(accepted=accepted, reason=reason)
     return attempt
 
@@ -407,19 +244,6 @@ def main() -> None:
         cpus = hi if len(accepted[hi]) <= len(accepted[lo]) else lo
         if len(accepted[cpus]) >= reps:
             cpus = hi if cpus == lo else lo
-        if (
-            all(len(accepted[c]) >= reps for c in (lo, hi))
-            and lo in WITNESS_REF
-            and hi in WITNESS_REF
-        ):
-            # both levels sampled: spend remaining budget on whichever
-            # leg sits furthest above its steady floor — that is the
-            # one distorting the efficiency figure (levels without a
-            # calibrated floor keep plain alternation)
-            def _gap(c):
-                return min(r["wall_sec"] for r in accepted[c]) / WITNESS_REF[c]
-
-            cpus = hi if _gap(hi) >= _gap(lo) else lo
         n_att += 1
         att = _gated_leg(cpus, ctl_procs)
         attempts.append(att)
@@ -453,18 +277,8 @@ def main() -> None:
         "metric": f"mining throughput scaling local[{lo}] -> local[{hi}]",
         "harness": "wave-aware: per-leg pure-compute control sandwich "
         f"({ctl_procs}-wide register-bound subprocesses, clean = "
-        "overhead <= tol); a leg is accepted when both controls are "
-        "clean OR its wall self-witnesses (lands within witness_tol of "
-        "the workload's historical steady floor — waves only inflate "
-        "compute walls, so a steady-floor wall cannot contain one)",
+        "overhead <= tol); a leg is accepted when both controls are clean",
         "control_tol": attempts[0]["ctl_pre"]["tol"] if attempts else None,
-        "witness_refs_sec": WITNESS_REF,
-        "witness_disabled_reason": WITNESS_DISABLED_REASON,
-        # degrade like _load_witness_refs: a missing mining-path file
-        # must not discard a whole campaign's measured attempts at
-        # artifact-write time (the witness path is already disabled)
-        "mining_path_sha256_16": _safe_mining_path_hash(),
-        "witness_tol": WITNESS_TOL,
         # per-leg partitions also land in each run dict; this echoes the
         # mode so the artifact is self-describing without the env
         "shuffle_per_core": per_core_shuffle(os.environ),

@@ -113,9 +113,7 @@ def main() -> None:
                 # per-cluster-size shuffle sizing (8->128, 32->512):
                 # the round-8 A/B (BENCH/probe_shuffle_ab_32.json) shows
                 # fixed-64 leaves the 32-wide level-3 join at 2 straggler-
-                # bound task waves, understating the leg >2x; per-core
-                # mode disables witness floors, so every accepted leg
-                # here is sandwich-clean by construction
+                # bound task waves, understating the leg >2x
                 SPARK_GRAFT_SHUFFLE_PER_CORE="16",
                 # this leg's healthy ceiling is 0.56-0.62 (bandwidth
                 # wall); 0.5 is the round-4-level "valid figure" bar

@@ -7,6 +7,10 @@ id — ``(floor((x-minx)/c), floor((y-miny)/c))`` — with a top-edge clamp to
 exact multiple of d; SURVEY §1 quirk 2).  The cell id doubles as the tile id
 for the raster/vector heatmap sink and generalizes to an H3/S2-style index:
 all downstream operators key on the opaque ``(cell_x, cell_y)`` pair only.
+
+``origin_grid`` is the unbounded variant the miner uses: anchored at the
+origin, so cell ids need no bounds pass and can be computed inside the
+first aggregate over the data.
 """
 
 from __future__ import annotations
@@ -27,6 +31,10 @@ class GridSpec:
     max_x: float
     max_y: float
     cell_size: float
+
+    @property
+    def bounded(self) -> bool:
+        return math.isfinite(self.max_x) and math.isfinite(self.max_y)
 
     @property
     def ncells_x(self) -> int:
@@ -51,18 +59,27 @@ def compute_bounds(instances: DataFrame, cell_size: float) -> GridSpec:
     return GridSpec(row.min_x, row.min_y, row.max_x, row.max_y, cell_size)
 
 
-def _cell_col(v: Column, lo: float, cell: float, ncells: int) -> Column:
-    return F.least(
-        F.floor((v - F.lit(lo)) / F.lit(cell)).cast("int"), F.lit(ncells - 1)
-    )
+def origin_grid(cell_size: float) -> GridSpec:
+    """Unbounded grid anchored at the origin.  Its cells are ``long`` and
+    never clamped, so any finite coordinate has a cell without a bounds
+    pass over the data."""
+    return GridSpec(0.0, 0.0, math.inf, math.inf, cell_size)
+
+
+def _cell_col(v: Column, lo: float, cell: float, ncells: int | None) -> Column:
+    c = F.floor((v - F.lit(lo)) / F.lit(cell))
+    if ncells is None:
+        return c
+    return F.least(c.cast("int"), F.lit(ncells - 1))
 
 
 def with_cell(instances: DataFrame, grid: GridSpec) -> DataFrame:
     """Append ``cell_x``/``cell_y`` tile coordinates."""
+    nx, ny = (grid.ncells_x, grid.ncells_y) if grid.bounded else (None, None)
     return instances.withColumns(
         {
-            "cell_x": _cell_col(F.col("x"), grid.min_x, grid.cell_size, grid.ncells_x),
-            "cell_y": _cell_col(F.col("y"), grid.min_y, grid.cell_size, grid.ncells_y),
+            "cell_x": _cell_col(F.col("x"), grid.min_x, grid.cell_size, nx),
+            "cell_y": _cell_col(F.col("y"), grid.min_y, grid.cell_size, ny),
         }
     )
 

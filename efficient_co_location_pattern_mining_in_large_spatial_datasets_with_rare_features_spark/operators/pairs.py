@@ -27,6 +27,12 @@ Skew handling (output-invariant by construction):
   tiles, wider stencil) when the densest cell exceeds the threshold, which
   cuts intra-cell candidate pairs ~4x before salting even starts.
 
+Called with only a distance, the operator runs two small jobs before the
+join: the bounds aggregate (``compute_bounds``) and the hot-cell occupancy
+collect.  A caller that already knows its grid and hot cells passes them
+in (``grid``, ``hot_cells``) and the operator launches no job at all: the
+miner counts both inside its stats aggregate over an ``origin_grid``.
+
 Output columns: ``a_feature a_id a_x a_y b_feature b_id b_x b_y dist``,
 canonicalized so ``a_id < b_id``.
 """
@@ -35,8 +41,9 @@ from __future__ import annotations
 
 import math
 import warnings
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .cells import GridSpec, compute_bounds, with_cell
@@ -57,18 +64,27 @@ def hot_cells_local(hot: DataFrame, cap: int = _MAX_HOT_CELLS) -> DataFrame | No
     heaviest are salted (salting any subset is output-invariant; the
     rest fall back to AQE) and a warning is emitted."""
     rows = hot.orderBy(F.col("weight").desc()).limit(cap + 1).collect()
-    if not rows:
+    return _hot_cells_frame(
+        hot.sparkSession, [(r["cell_x"], r["cell_y"], r["weight"]) for r in rows], cap
+    )
+
+
+def _hot_cells_frame(
+    spark: SparkSession, cells: Sequence[tuple[int, int, int]], cap: int = _MAX_HOT_CELLS
+) -> DataFrame | None:
+    """Driver-local frame of already-counted ``(cell_x, cell_y, weight)``
+    hot cells, capped to the ``cap`` heaviest like ``hot_cells_local``."""
+    if not cells:
         return None
-    if len(rows) > cap:
+    if len(cells) > cap:
         warnings.warn(
             f"more than {cap} hot cells; salting only the {cap} heaviest "
             "(raise salt_threshold or the cap for full coverage)",
-            stacklevel=2,
+            stacklevel=3,
         )
-        rows = rows[:cap]
-    return hot.sparkSession.createDataFrame(
-        [(int(r["cell_x"]), int(r["cell_y"])) for r in rows],
-        "cell_x int, cell_y int",
+        cells = sorted(cells, key=lambda c: -c[2])[:cap]
+    return spark.createDataFrame(
+        [(int(cx), int(cy)) for cx, cy, _ in cells], "cell_x long, cell_y long"
     )
 
 
@@ -90,6 +106,7 @@ def neighbor_pairs(
     grid: GridSpec | None = None,
     cross_feature_only: bool = True,
     extra_cols: tuple[str, ...] = (),
+    hot_cells: Sequence[tuple[int, int, int]] | None = None,
 ) -> DataFrame:
     """All unordered cross-feature instance pairs within distance ``d``.
 
@@ -100,11 +117,19 @@ def neighbor_pairs(
     spatiotemporal predicates) — they appear as ``a_<col>``/``b_<col>`` in
     the output; carrying them here costs one wider shuffle row, versus two
     full re-joins on id if attached afterwards.
+
+    ``hot_cells`` lists the ``(cell_x, cell_y, count)`` cells of ``grid``
+    holding more than ``salt_threshold`` instances, when the caller has
+    already counted them (an empty list: none is hot); ``None`` counts
+    them here with one occupancy job.  Adaptive cell split re-counts at
+    each finer grid, so it cannot take them.
     """
     if cell_size is None:
         cell_size = d
     if not (0 < cell_size <= d):
         raise ValueError(f"cell_size must be in (0, d], got {cell_size} for d={d}")
+    if hot_cells is not None and (grid is None or adaptive_cell_split):
+        raise ValueError("hot_cells needs the grid they were counted on and no adaptive split")
     cols = _INST_COLS + tuple(c for c in extra_cols if c not in _INST_COLS)
 
     if grid is None:
@@ -118,8 +143,10 @@ def neighbor_pairs(
     if instances.rdd.getNumPartitions() < parallelism:
         instances = instances.repartition(parallelism)
 
-    hot_cells: DataFrame | None = None
-    if salt_threshold is not None or adaptive_cell_split:
+    hot: DataFrame | None = None
+    if hot_cells is not None:
+        hot = _hot_cells_frame(instances.sparkSession, hot_cells)
+    elif salt_threshold is not None or adaptive_cell_split:
         occupancy = (
             with_cell(instances, grid).groupBy("cell_x", "cell_y").count()
         )
@@ -130,7 +157,7 @@ def neighbor_pairs(
                 occupancy = with_cell(instances, grid).groupBy("cell_x", "cell_y").count()
                 max_occ = occupancy.agg(F.max("count")).collect()[0][0] or 0
         if salt_threshold is not None:
-            hot_cells = hot_cells_local(
+            hot = hot_cells_local(
                 occupancy.filter(F.col("count") > salt_threshold).select(
                     "cell_x", "cell_y", F.col("count").alias("weight")
                 )
@@ -143,9 +170,9 @@ def neighbor_pairs(
 
     # Build side: keyed by own cell; salted bucket only inside hot cells.
     build = cells
-    if hot_cells is not None:
+    if hot is not None:
         build = build.join(
-            F.broadcast(hot_cells.withColumn("_hot", F.lit(True))),
+            F.broadcast(hot.withColumn("_hot", F.lit(True))),
             ["cell_x", "cell_y"],
             "left",
         )
@@ -178,10 +205,10 @@ def neighbor_pairs(
         (F.col("cell_y") + F.col("_off.oy")).alias("t_cy"),
         ((F.col("_off.ox") == 0) & (F.col("_off.oy") == 0)).alias("same_cell"),
     )
-    if hot_cells is not None:
+    if hot is not None:
         probe = probe.join(
             F.broadcast(
-                hot_cells.select(
+                hot.select(
                     F.col("cell_x").alias("t_cx"),
                     F.col("cell_y").alias("t_cy"),
                     F.lit(True).alias("_hot"),

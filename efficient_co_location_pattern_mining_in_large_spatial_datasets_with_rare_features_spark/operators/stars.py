@@ -1,9 +1,10 @@
 """Ordered star neighborhoods (the reference's NR-tree, relationally).
 
-From each unordered neighbor pair, keep exactly one directed edge
+Each unordered neighbor pair becomes exactly one directed edge
 ``center -> nbr`` oriented by the global canonical feature rank
-(ascending instance count, name tie-break): the edge survives iff
-``rank(center.feature) < rank(nbr.feature)``.
+(ascending instance count, name tie-break): the center is the side with
+the smaller rank.  One projection orients every pair, so the pair join
+under it runs once.
 
 Reference parity: ``isOrdered`` keeps a neighbor iff the center's feature
 has a strictly smaller count, or equal counts and ``center.feature <=
@@ -40,24 +41,18 @@ def star_edges(pairs: DataFrame, counts: Mapping[str, int]) -> DataFrame:
     one row per input pair.
     """
     rank = feature_rank(counts)
-    if rank:
-        rank_expr = F.create_map(*[F.lit(x) for kv in rank.items() for x in kv])
-        keep = rank_expr[F.col("center_feature")] < rank_expr[F.col("nbr_feature")]
-    else:  # no features at all -> no edges
-        keep = F.lit(False)
-    fwd = pairs.select(
-        F.col("a_feature").alias("center_feature"),
-        F.col("a_id").alias("center_id"),
-        F.col("b_feature").alias("nbr_feature"),
-        F.col("b_id").alias("nbr_id"),
+    rank_expr = F.create_map(*[F.lit(x) for kv in rank.items() for x in kv])
+    a_first = rank_expr[F.col("a_feature")] < rank_expr[F.col("b_feature")]
+
+    def pick(first: str, second: str) -> F.Column:
+        return F.when(a_first, F.col(first)).otherwise(F.col(second))
+
+    return pairs.select(
+        pick("a_feature", "b_feature").alias("center_feature"),
+        pick("a_id", "b_id").alias("center_id"),
+        pick("b_feature", "a_feature").alias("nbr_feature"),
+        pick("b_id", "a_id").alias("nbr_id"),
     )
-    rev = pairs.select(
-        F.col("b_feature").alias("center_feature"),
-        F.col("b_id").alias("center_id"),
-        F.col("a_feature").alias("nbr_feature"),
-        F.col("a_id").alias("nbr_id"),
-    )
-    return fwd.unionByName(rev).filter(keep)
 
 
 def star_table(edges: DataFrame) -> DataFrame:

@@ -43,7 +43,8 @@ def brute_force_mine(
 ) -> tuple[set[tuple[str, ...]], dict]:
     """Exhaustive mining: enumerate every clique of every candidate pattern.
 
-    Returns (prevalent pattern set as canonical tuples, debug info).
+    Returns (prevalent pattern set as canonical tuples, debug info with
+    counts, delta, pairs, rank and the WPI of each prevalent pattern).
     """
     counts: dict[str, int] = {}
     for f, *_ in rows:
@@ -63,6 +64,7 @@ def brute_force_mine(
         neigh.setdefault(b, set()).add(a)
 
     prevalent: set[tuple[str, ...]] = set()
+    wpi: dict[tuple[str, ...], float] = {}
     m = len(ranked)
 
     # enumerate candidates of each size in canonical rank order
@@ -89,6 +91,7 @@ def brute_force_mine(
             if w >= min_prev:
                 survivors.add(combo)
                 prevalent.add(combo)
+                wpi[combo] = w
         prev_level = survivors
         k += 1
 
@@ -97,6 +100,7 @@ def brute_force_mine(
         "delta": delta_value,
         "pairs": pair_set,
         "rank": rank,
+        "wpi": wpi,
     }
 
 

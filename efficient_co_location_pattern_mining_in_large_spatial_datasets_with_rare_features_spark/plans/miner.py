@@ -22,11 +22,18 @@ Reference-semantics riders replicated exactly (FIXTURES.md §5):
   with no table rows has PR = 0 and prunes (src/utils.cpp:171-181);
 - only sizes k >= 2 are emitted (src/miner.cpp:53-57,91).
 
+Spark actions: one stats aggregate before level 2 (feature histogram,
+coordinate check, the pair join's hot cells and the id-hash check, see
+``_stats``), then one participation collect per level.  Levels k >= 3 are
+checkpointed lazily, so that collect also stores the level table the next
+level joins against; no action runs on a background thread.
+
 Checkpoint/resume: with ``config.checkpoint_dir`` set, each level's table
 instance is written to parquet together with a JSON manifest carrying the
 level's candidates, prevalent set, PI map, per-partition row counts and
-lineage ids; ``mine(resume=True)`` reloads the last complete level and
-continues, so a failure mid-level-k costs only that level.
+lineage ids; ``mine(resume=True)`` reloads the last level of the unbroken
+chain from level 2 and continues, so a failure mid-level-k costs only that
+level.
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ from pyspark.sql import functions as F
 
 from ..config import ColocationConfig
 from ..functions import measures
+from ..operators.cells import origin_grid, with_cell
 from ..operators.pairs import neighbor_pairs
 from ..operators.stars import star_edges
 
@@ -173,6 +181,8 @@ class ColocationMiner:
     def __init__(self, spark: SparkSession, config: ColocationConfig):
         self.spark = spark
         self.config = config
+        #: (grid, hot cells) of the pair join, counted by ``_stats``
+        self._pair_plan = (None, None)
 
     # ------------------------------------------------------------------ io
     def _ckpt_path(self, *parts: str) -> str:
@@ -281,8 +291,14 @@ class ColocationMiner:
             if name.startswith("level_") and os.path.exists(mpath):
                 with open(mpath) as f:
                     out.append(json.load(f))
-        out.sort(key=lambda m: m["level"])
-        return out
+        # only the unbroken chain from level 2 belongs to one run: a level
+        # after a missing one was written before it and is not resumed
+        chain: list[dict] = []
+        for m in sorted(out, key=lambda m: m["level"]):
+            if m["level"] != len(chain) + 2:
+                break
+            chain.append(m)
+        return chain
 
     def _validate_manifest_config(self, last: dict) -> None:
         """Checkpointed levels were mined under a specific semantic config;
@@ -346,62 +362,67 @@ class ColocationMiner:
 
     # ---------------------------------------------------------------- plan
     def _stats(self, instances: DataFrame, check_hashes: bool = True):
-        """Stats job (per-feature histogram -> rank/delta) plus an
-        OPTIMISTIC id-hash injectivity check.
+        """The one stats job: a single grouping-sets aggregate that yields
+
+        - the per-feature histogram (-> rank/delta), with a count of null or
+          non-finite coordinates per feature, which raises ``ValueError``;
+        - the hot cells of the pair join's ``origin_grid`` (occupancy above
+          ``salt_threshold``), kept in ``self._pair_plan`` for
+          ``build_pairs`` so the pair operator launches no job of its own;
+        - the per-feature id-hash injectivity check.
 
         Instance ids are xxhash64-encoded to int64 for every mining table
         (level tables shuffle arrays of longs instead of strings, ~4x
         smaller rows); encoding is safe iff hashing is injective per feature
         (participation counts are per-feature, so cross-feature collisions
-        are harmless).  A collision has 2^-64-scale probability per pair, so
-        the check — ``countDistinct(hash) == count(*)`` per feature, which
-        duplicated input ids also fail, falling back to exact string ids —
-        runs on a BACKGROUND thread off the critical path; ``mine()`` joins
-        it before returning and raises IdHashCollision on the (practically
-        never taken) unlucky branch so the caller reruns with
-        ``encode_ids=False``.  The blocking stats job itself is a cheap
-        count-only aggregate."""
-        import threading
-
-        stats_rows = (
-            instances.groupBy("feature").agg(F.count("*").alias("cnt")).collect()
+        are harmless).  Any (feature, hash) group holding more than one
+        instance fails the check — duplicated input ids fail it too — and
+        ``join_check()`` returns False, so the caller mines with exact
+        string ids instead."""
+        cfg = self.config
+        grid = None if cfg.adaptive_cell_split else origin_grid(cfg.effective_cell_size())
+        salt = cfg.salt_threshold if grid is not None else None
+        x, y = F.col("x"), F.col("y")
+        bad = x.isNull() | y.isNull() | F.isnan(x) | F.isnan(y)
+        bad = bad | (F.abs(x) == float("inf")) | (F.abs(y) == float("inf"))
+        # grouping set -> (its key columns, which of its rows to collect)
+        sets = {"feature": (["feature"], F.lit(True))}
+        if salt is not None:
+            instances = with_cell(instances, grid)
+            sets["cell"] = (["cell_x", "cell_y"], F.col("n") > salt)
+        if check_hashes:
+            instances = instances.withColumn("h", F.xxhash64("id"))
+            sets["hash"] = (["feature", "h"], F.col("n") > 1)
+        cols = list(dict.fromkeys(c for kept, _ in sets.values() for c in kept))
+        gids = {
+            name: sum(1 << (len(cols) - 1 - i) for i, c in enumerate(cols) if c not in kept)
+            for name, (kept, _) in sets.items()
+        }
+        wanted = F.lit(False)
+        for name, (_, keep) in sets.items():
+            wanted = wanted | ((F.col("gid") == gids[name]) & keep)
+        rows = (
+            instances.select(*cols, bad.cast("int").alias("bad"))
+            .groupingSets([kept for kept, _ in sets.values()], *cols)
+            .agg(F.count("*").alias("n"), F.sum("bad").alias("bad"), F.grouping_id().alias("gid"))
+            .filter(wanted)
+            .collect()
         )
-        counts = {r["feature"]: r["cnt"] for r in stats_rows}
+        of = {name: [r for r in rows if r["gid"] == g] for name, g in gids.items()}
+
+        bad_features = sorted((r["feature"], r["bad"]) for r in of["feature"] if r["bad"])
+        if bad_features:
+            raise ValueError(
+                "instances need finite x and y; null or non-finite coordinates in "
+                + ", ".join(f"feature {f!r}: {n}" for f, n in bad_features)
+            )
+        hot = [(r["cell_x"], r["cell_y"], r["n"]) for r in of.get("cell", [])]
+        self._pair_plan = (grid, hot if grid is not None else None)
+        injective = not of.get("hash")
+        counts = {r["feature"]: r["n"] for r in of["feature"]}
         rank = {f: i for i, f in enumerate(measures.rank_features(counts))}
         self._rank = rank
-        delta_value = measures.delta(counts)
-
-        if not check_hashes:
-            return counts, rank, delta_value, lambda: True
-
-        check: dict[str, object] = {"ok": True, "err": None}
-
-        def _verify():
-            try:
-                bad = (
-                    instances.groupBy("feature")
-                    .agg(
-                        F.count("*").alias("cnt"),
-                        F.countDistinct(F.xxhash64("id")).alias("n_hashed"),
-                    )
-                    .filter(F.col("n_hashed") != F.col("cnt"))
-                    .limit(1)
-                    .collect()
-                )
-                check["ok"] = not bad
-            except Exception as e:  # surface check failures, never swallow
-                check["err"] = e
-
-        t = threading.Thread(target=_verify, daemon=True)
-        t.start()
-
-        def join_check() -> bool:
-            t.join()
-            if check["err"] is not None:
-                raise check["err"]
-            return bool(check["ok"])
-
-        return counts, rank, delta_value, join_check
+        return counts, rank, measures.delta(counts), lambda: injective
 
     def _encoded_edges(self, instances: DataFrame, counts, rank, encode_ids):
         """Star edges with features as canonical-rank ints (no shuffle ever
@@ -515,7 +536,10 @@ class ColocationMiner:
         return edges.repartition(nparts, "center_id", "nbr_feature")
 
     def build_pairs(self, instances: DataFrame) -> DataFrame:
+        """Neighbor pairs on the grid and hot cells ``_stats`` counted (or,
+        with adaptive cell split, on the operator's own bounds grid)."""
         cfg = self.config
+        grid, hot = self._pair_plan
         return neighbor_pairs(
             instances,
             cfg.neighbor_distance,
@@ -523,6 +547,8 @@ class ColocationMiner:
             salt_threshold=cfg.salt_threshold,
             salt_buckets=cfg.salt_buckets,
             adaptive_cell_split=cfg.adaptive_cell_split,
+            grid=grid,
+            hot_cells=hot,
         )
 
     def _table_k(
@@ -653,6 +679,12 @@ class ColocationMiner:
         counts, rank, delta_value, join_check = self._stats(
             instances, check_hashes=encode_ids
         )
+        # Duplicate or colliding ids: mine with exact string ids instead.  Any
+        # checkpoint of an earlier encoded run is invalidated so no later
+        # resume can mix encodings.
+        if encode_ids and not join_check():
+            self._invalidate_manifests()
+            return self.mine(instances, resume=False, _encode=False)
 
         # pairs -> edges is one linear pipeline; only the edges need to be
         # kept (one edge per pair, so pair_count == T_2 rows — no separate
@@ -769,19 +801,19 @@ class ColocationMiner:
 
             # Truncate lineage: each level joins against the previous one and
             # the plan tree would otherwise grow exponentially (SURVEY §7).
-            # localCheckpoint also persists the level's rows for the next join.
+            # The checkpoint is lazy: the participation collect is the one
+            # action of the level, and it stores the level's rows for the next
+            # join (and the parquet write) as it runs.
             # T_2 is exempt: it is a pure projection of the persisted edges,
             # so materializing it would double-store the biggest table.
             # The FINAL level is also exempt: no level k+1 will read it, so
-            # participation aggregates straight off the fused join pipeline
-            # (partial agg before the shuffle) instead of materializing the
-            # biggest table once to storage and scanning it again.
+            # participation aggregates straight off the fused join pipeline.
             is_final = (
                 cfg.max_pattern_size is not None and k >= cfg.max_pattern_size
             ) or k >= len(counts)
             if k > 2:
                 if not is_final or self.config.checkpoint_dir:
-                    t_k = t_k.localCheckpoint(eager=True)
+                    t_k = t_k.localCheckpoint(eager=False)
                 part, rows_by_pid = self._participation(t_k)
             table_rows = sum(rows_by_pid.values())
             if k == 2:
@@ -818,14 +850,6 @@ class ColocationMiner:
                 t_prev.unpersist()
             if cfg.persist_intermediates:
                 edges.unpersist()
-
-        # Join the optimistic injectivity check: on the ~2^-64-probability
-        # unlucky branch, rebuild everything with exact string ids.  The
-        # checkpoints written this run carry collision-tainted encoded ids;
-        # invalidate their manifests so no later resume can mix encodings.
-        if encode_ids and not join_check():
-            self._invalidate_manifests()
-            return self.mine(instances, resume=False, _encode=False)
 
         return MiningResult(
             patterns=all_patterns,
@@ -884,6 +908,11 @@ class ColocationMiner:
         counts, rank, delta_value, join_check = self._stats(
             instances, check_hashes=encode_ids
         )
+        if encode_ids and not join_check():
+            self._invalidate_manifests()
+            return self.mine_subtrees(
+                instances, max_workers=max_workers, _encode=False
+            )
         ranked = measures.rank_features(counts)
         edges = self._edge_table(
             instances, counts, rank, encode_ids, resume
@@ -990,7 +1019,7 @@ class ColocationMiner:
                     cfg.max_pattern_size is not None and k >= cfg.max_pattern_size
                 ) or k >= len(counts)
                 if not is_final or cfg.checkpoint_dir:
-                    t_k = t_k.localCheckpoint(eager=True)
+                    t_k = t_k.localCheckpoint(eager=False)
                 part, rows_by_pid = self._participation(t_k)
                 prevalent, pi_map, wpi_map = self._select_prevalent(
                     filtered, part, counts, delta_value
@@ -1027,12 +1056,6 @@ class ColocationMiner:
             # a failing subtree (config mismatch on resume, executor error)
             # must not leave the freshly-shuffled edge cache pinned
             edges.unpersist()
-
-        if encode_ids and not join_check():
-            self._invalidate_manifests()
-            return self.mine_subtrees(
-                instances, max_workers=max_workers, _encode=False
-            )
 
         all_patterns: list[Pattern] = []
         all_wpi: dict[Pattern, float] = {}

@@ -1,11 +1,14 @@
 import os
 import sys
+from types import SimpleNamespace
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark as eng  # noqa: E402
+from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark import oracle  # noqa: E402
 
 REFDATA = "/root/reference/data"
 TESTDATA_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
@@ -28,4 +31,24 @@ def sample_instances(spark):
         load_instances_csv,
     )
 
-    return load_instances_csv(spark, f"{REFDATA}/sample_data.csv").persist()
+    path = f"{REFDATA}/sample_data.csv"
+    if not os.path.exists(path):
+        pytest.skip(f"reference dataset not mounted ({path} is missing)")
+    return load_instances_csv(spark, path).persist()
+
+
+@pytest.fixture(scope="session")
+def generated(spark):
+    """A generated dataset that mines up to size-4 patterns, with the
+    brute-force oracle's answer: ``df``, ``rows``, ``d``, ``min_prev``,
+    ``patterns`` (the prevalent set) and ``info`` (counts, delta, pairs,
+    wpi)."""
+    rows = oracle.make_random_dataset(
+        np.random.default_rng(11), n_features=4, n_instances=60, extent=18.0
+    )
+    d, min_prev = 4.0, 0.3
+    patterns, info = oracle.brute_force_mine(rows, d, min_prev)
+    df = spark.createDataFrame(rows, "feature string, id string, x double, y double")
+    return SimpleNamespace(
+        df=df.persist(), rows=rows, d=d, min_prev=min_prev, patterns=patterns, info=info
+    )

@@ -1,5 +1,9 @@
 """Miner end-to-end: sample_data golden, stars, checkpoint/resume, and
-randomized property tests against the exhaustive NumPy oracle."""
+randomized property tests against the exhaustive NumPy oracle.
+
+Only the sample_data golden needs the reference dataset; every other test
+runs on the generated fixture (conftest ``generated``), whose golden is
+``oracle.brute_force_mine``."""
 
 import os
 
@@ -15,6 +19,9 @@ from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_fe
     star_edges,
     star_table,
 )
+
+#: Spark jobs of one mine of the generated fixture (4 levels, in memory)
+MINE_JOB_BOUND = 20
 
 GOLD_SAMPLE = {
     frozenset(p)
@@ -40,59 +47,118 @@ def test_sample_data_golden(spark, sample_instances):
         assert list(p) == sorted(p, key=lambda f: rank[f])
 
 
-def test_star_edges_one_per_pair(spark, sample_instances):
-    pairs = neighbor_pairs(sample_instances, 5.0)
-    counts = {r["feature"]: r["count"] for r in sample_instances.groupBy("feature").count().collect()}
-    edges = star_edges(pairs, counts)
-    assert edges.count() == pairs.count()
+def _assert_oracle(res, g) -> None:
+    """``res`` is the brute-force oracle's answer on the generated fixture."""
+    assert {tuple(p) for p in res.patterns} == g.patterns
+    assert res.wpi.keys() == g.info["wpi"].keys()
+    for p, w in g.info["wpi"].items():
+        assert abs(res.wpi[p] - w) < 1e-12, p
+    assert res.pair_count == len(g.info["pairs"])
+    assert abs(res.delta - g.info["delta"]) < 1e-12
+
+
+def _duplicate_ids(df):
+    """A2 renamed to A1: one id shared by two instances of feature A."""
+    from pyspark.sql import functions as F
+
+    return df.withColumn(
+        "id", F.when(F.col("id") == "A2", F.lit("A1")).otherwise(F.col("id"))
+    )
+
+
+def test_star_edges_one_per_pair(spark, generated):
+    pairs = neighbor_pairs(generated.df, generated.d)
+    counts = generated.info["counts"]
+    edges = star_edges(pairs, counts).collect()
+    assert len(edges) == len(generated.info["pairs"])
+    assert {frozenset((r["center_id"], r["nbr_id"])) for r in edges} == generated.info["pairs"]
     # orientation: center feature strictly rarer (or name-tie-smaller)
     from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark.operators.stars import (
         feature_rank,
     )
     rank = feature_rank(counts)
-    for r in edges.collect():
+    for r in edges:
         assert rank[r["center_feature"]] < rank[r["nbr_feature"]]
+        assert r["center_id"][0] == r["center_feature"] and r["nbr_id"][0] == r["nbr_feature"]
 
 
-def test_star_table_grouping(spark, sample_instances):
-    pairs = neighbor_pairs(sample_instances, 5.0)
-    counts = {r["feature"]: r["count"] for r in sample_instances.groupBy("feature").count().collect()}
-    st = star_table(star_edges(pairs, counts))
+def test_star_table_grouping(spark, generated):
+    pairs = neighbor_pairs(generated.df, generated.d)
+    st = star_table(star_edges(pairs, generated.info["counts"]))
     row = {(r["center_id"], r["nbr_feature"]): r["nbr_ids"] for r in st.collect()}
+    assert row
     for ids in row.values():
         assert ids == sorted(ids) and len(ids) == len(set(ids))
 
 
-def test_checkpoint_resume_identical(spark, sample_instances, tmp_path):
+def test_mine_launches_every_job_on_the_caller_thread(spark, generated):
+    """Every Spark job of a mine reaching k=4 runs under the caller's job
+    group, so none comes from a background thread, and the mine stays at
+    its pinned job count: one action per level, none before the pair
+    join.  A new collect in the miner shows up here."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-mine-job-count"
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "mine under a job group")
+    try:
+        res = eng.ColocationMiner(spark, cfg).mine(generated.df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _assert_oracle(res, generated)
+    assert max(len(p) for p in res.patterns) == 4
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    assert len(tracker.getJobIdsForGroup(group)) <= MINE_JOB_BOUND
+
+
+@pytest.mark.parametrize("coord,bad", [("x", float("nan")), ("x", None), ("y", float("-inf"))])
+def test_non_finite_coordinates_raise(spark, generated, coord, bad):
+    """A NaN, null or infinite coordinate is an input error naming the
+    feature and its count, not a silently uncounted instance."""
+    rows = [
+        (f, i, bad if coord == "x" and i in ("B1", "B2") else x,
+         bad if coord == "y" and i in ("B1", "B2") else y)
+        for f, i, x, y in generated.rows
+    ]
+    df = spark.createDataFrame(rows, "feature string, id string, x double, y double")
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    with pytest.raises(ValueError, match=r"feature 'B': 2"):
+        eng.ColocationMiner(spark, cfg).mine(df)
+
+
+def test_checkpoint_resume_identical(spark, generated, tmp_path):
     ck = str(tmp_path / "ckpt")
-    cfg = eng.ColocationConfig(5.0, 0.6, checkpoint_dir=ck)
-    res_full = eng.ColocationMiner(spark, cfg).mine(sample_instances)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev, checkpoint_dir=ck)
+    res_full = eng.ColocationMiner(spark, cfg).mine(generated.df)
+    _assert_oracle(res_full, generated)
     # simulate failure after level 2: drop the level-3 checkpoint then resume
     import shutil
 
     shutil.rmtree(os.path.join(ck, "level_3"))
-    res_resumed = eng.ColocationMiner(spark, cfg).mine(sample_instances, resume=True)
-    assert {frozenset(p) for p in res_resumed.patterns} == {
-        frozenset(p) for p in res_full.patterns
-    }
+    res_resumed = eng.ColocationMiner(spark, cfg).mine(generated.df, resume=True)
+    _assert_oracle(res_resumed, generated)
     # manifests carry row counts and per-partition lineage metrics
     import json
 
+    n_pairs = len(generated.info["pairs"])
     with open(os.path.join(ck, "level_2", "manifest.json")) as f:
         m = json.load(f)
-    assert m["row_count"] == 48
-    assert sum(c for _, c in m["partition_row_counts"]) == 48
-    assert m["lineage"]["config"]["neighbor_distance"] == 5.0
-    # resume restores pair_count from the level-2 manifest
-    assert res_resumed.pair_count == res_full.pair_count == 48
+    assert m["row_count"] == n_pairs
+    assert sum(c for _, c in m["partition_row_counts"]) == n_pairs
+    assert m["lineage"]["config"]["neighbor_distance"] == generated.d
+    # the lazily checkpointed level-3 table was written in full
+    with open(os.path.join(ck, "level_3", "manifest.json")) as f:
+        m3 = json.load(f)
+    assert m3["row_count"] == sum(c for _, c in m3["partition_row_counts"]) > 0
     # resuming under a different semantic config must refuse, not mix levels
-    cfg_changed = eng.ColocationConfig(4.0, 0.6, checkpoint_dir=ck)
+    cfg_changed = eng.ColocationConfig(generated.d - 1.0, generated.min_prev, checkpoint_dir=ck)
     with pytest.raises(ValueError, match="checkpoint was mined under"):
-        eng.ColocationMiner(spark, cfg_changed).mine(sample_instances, resume=True)
+        eng.ColocationMiner(spark, cfg_changed).mine(generated.df, resume=True)
 
 
 def test_bucketed_edges_durable_and_exchange_free_on_resume(
-    spark, sample_instances, tmp_path
+    spark, generated, tmp_path
 ):
     """r05 verdict #1: with a checkpoint dir the edge table is written once,
     bucketed on the clique-join key (center_id, nbr_feature); a resume —
@@ -103,26 +169,23 @@ def test_bucketed_edges_durable_and_exchange_free_on_resume(
     import json
     import shutil
 
-    from pyspark.sql import functions as F
-
     from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark.sources.bucketed import (
         exchange_count,
     )
 
     ck = str(tmp_path / "ck")
-    cfg = eng.ColocationConfig(5.0, 0.6, checkpoint_dir=ck)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev, checkpoint_dir=ck)
     m = eng.ColocationMiner(spark, cfg)
-    res1 = m.mine(sample_instances)
+    res1 = m.mine(generated.df)
+    _assert_oracle(res1, generated)
     with open(os.path.join(ck, "edges_manifest.json")) as f:
         man = json.load(f)
-    assert man["neighbor_distance"] == 5.0 and man["encode_ids"] is True
+    assert man["neighbor_distance"] == generated.d and man["encode_ids"] is True
     # simulate a fresh session (catalog entry gone) + failure after level 2
     spark.sql(f"DROP TABLE IF EXISTS {man['table']}")
     shutil.rmtree(os.path.join(ck, "level_3"))
-    res2 = m.mine(sample_instances, resume=True)
-    assert {frozenset(p) for p in res2.patterns} == {
-        frozenset(p) for p in res1.patterns
-    }
+    res2 = m.mine(generated.df, resume=True)
+    _assert_oracle(res2, generated)
     assert spark.catalog.tableExists(man["table"])  # re-registered
 
     t = spark.table(man["table"])
@@ -146,32 +209,35 @@ def test_bucketed_edges_durable_and_exchange_free_on_resume(
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_resume_after_completed_capped_run_is_noop(spark, sample_instances, tmp_path):
+def test_resume_after_completed_capped_run_is_noop(spark, generated, tmp_path):
     """Resuming a COMPLETED max_pattern_size-bounded run must not mine one
     level past the cap (start_k = cap + 1 must skip the loop entirely)."""
     ck = str(tmp_path / "ckpt_cap")
-    cfg = eng.ColocationConfig(5.0, 0.6, max_pattern_size=2, checkpoint_dir=ck)
-    res_full = eng.ColocationMiner(spark, cfg).mine(sample_instances)
-    assert all(len(p) == 2 for p in res_full.patterns)
-    res_resumed = eng.ColocationMiner(spark, cfg).mine(sample_instances, resume=True)
+    d, mp = generated.d, generated.min_prev
+    cfg = eng.ColocationConfig(d, mp, max_pattern_size=2, checkpoint_dir=ck)
+    res_full = eng.ColocationMiner(spark, cfg).mine(generated.df)
+    assert {tuple(p) for p in res_full.patterns} == {p for p in generated.patterns if len(p) == 2}
+    res_resumed = eng.ColocationMiner(spark, cfg).mine(generated.df, resume=True)
     assert sorted(res_resumed.patterns) == sorted(res_full.patterns)
-    assert res_resumed.pair_count == res_full.pair_count
+    assert res_resumed.pair_count == res_full.pair_count == len(generated.info["pairs"])
     # no level past the cap was checkpointed by the resumed run
     assert not os.path.isdir(os.path.join(ck, "level_3"))
     # resuming under a DIFFERENT cap must refuse (a deeper checkpoint
     # resumed under a smaller cap would report patterns above it)
-    cfg_uncapped = eng.ColocationConfig(5.0, 0.6, checkpoint_dir=ck)
+    cfg_uncapped = eng.ColocationConfig(d, mp, checkpoint_dir=ck)
     with pytest.raises(ValueError, match="checkpoint was mined under"):
-        eng.ColocationMiner(spark, cfg_uncapped).mine(sample_instances, resume=True)
+        eng.ColocationMiner(spark, cfg_uncapped).mine(generated.df, resume=True)
 
 
-def test_subtree_checkpoint_resume_identical(spark, sample_instances, tmp_path):
+def test_subtree_checkpoint_resume_identical(spark, generated, tmp_path):
     """Kill/relaunch on the Algorithm-3 plan: per-subtree manifests must
     reproduce byte-identical output after dropping one subtree's last
     level (the levelwise test's contract, at subtree granularity)."""
     ck = str(tmp_path / "ckpt_sub")
-    cfg = eng.ColocationConfig(5.0, 0.6, checkpoint_dir=ck)
-    res_full = eng.ColocationMiner(spark, cfg).mine_subtrees(sample_instances)
+    d, mp = generated.d, generated.min_prev
+    cfg = eng.ColocationConfig(d, mp, checkpoint_dir=ck)
+    res_full = eng.ColocationMiner(spark, cfg).mine_subtrees(generated.df)
+    _assert_oracle(res_full, generated)
     # every subtree that mined a level wrote manifests under subtree_<rank>/
     subdirs = sorted(d for d in os.listdir(ck) if d.startswith("subtree_"))
     assert subdirs, "subtree checkpoints missing"
@@ -182,18 +248,14 @@ def test_subtree_checkpoint_resume_identical(spark, sample_instances, tmp_path):
     assert os.path.isdir(victim)
     shutil.rmtree(victim)
     res_resumed = eng.ColocationMiner(spark, cfg).mine_subtrees(
-        sample_instances, resume=True
+        generated.df, resume=True
     )
-    assert {frozenset(p) for p in res_resumed.patterns} == {
-        frozenset(p) for p in res_full.patterns
-    }
-    assert res_resumed.wpi == res_full.wpi
-    assert res_resumed.pair_count == res_full.pair_count == 48
+    _assert_oracle(res_resumed, generated)
     # resuming under a different semantic config must refuse, not mix levels
-    cfg_changed = eng.ColocationConfig(4.0, 0.6, checkpoint_dir=ck)
+    cfg_changed = eng.ColocationConfig(d - 1.0, mp, checkpoint_dir=ck)
     with pytest.raises(ValueError, match="checkpoint was mined under"):
         eng.ColocationMiner(spark, cfg_changed).mine_subtrees(
-            sample_instances, resume=True
+            generated.df, resume=True
         )
 
 
@@ -211,73 +273,68 @@ def test_random_mining_matches_oracle(spark, seed):
     assert res.pair_count == len(info["pairs"])
 
 
-def test_max_pattern_size_cap(spark, sample_instances):
-    cfg = eng.ColocationConfig(5.0, 0.6, max_pattern_size=2)
-    res = eng.ColocationMiner(spark, cfg).mine(sample_instances)
-    assert all(len(p) == 2 for p in res.patterns)
-    assert {frozenset(p) for p in res.patterns} == {
-        p for p in GOLD_SAMPLE if len(p) == 2
-    }
+def test_max_pattern_size_cap(spark, generated):
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev, max_pattern_size=2)
+    res = eng.ColocationMiner(spark, cfg).mine(generated.df)
+    assert {tuple(p) for p in res.patterns} == {p for p in generated.patterns if len(p) == 2}
 
 
-def test_subtree_plan_matches_levelwise_sample(spark, sample_instances):
-    cfg = eng.ColocationConfig(5.0, 0.6)
-    res_lw = eng.ColocationMiner(spark, cfg).mine(sample_instances)
-    res_st = eng.ColocationMiner(spark, cfg).mine_subtrees(sample_instances)
+def test_subtree_plan_matches_levelwise_sample(spark, generated):
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    res_lw = eng.ColocationMiner(spark, cfg).mine(generated.df)
+    res_st = eng.ColocationMiner(spark, cfg).mine_subtrees(generated.df)
+    _assert_oracle(res_lw, generated)
+    _assert_oracle(res_st, generated)
     assert sorted(res_st.patterns) == sorted(res_lw.patterns)
-    assert res_st.pair_count == res_lw.pair_count
-    for p in res_lw.patterns:
-        assert abs(res_st.wpi[p] - res_lw.wpi[p]) < 1e-12
+    assert res_st.wpi == res_lw.wpi
 
 
-def test_duplicate_ids_fall_back_to_string_ids(spark, sample_instances):
-    """Duplicated instance ids fail the optimistic injectivity check; the
-    miner must transparently rerun on exact string ids, matching the
-    forced-fallback result."""
-    from pyspark.sql import functions as F
-
-    dup = sample_instances.withColumn(
-        "id", F.when(F.col("id") == "A2", F.lit("A1")).otherwise(F.col("id"))
-    )
-    cfg = eng.ColocationConfig(5.0, 0.6)
-    res_opt = eng.ColocationMiner(spark, cfg).mine(dup)
-    res_str = eng.ColocationMiner(spark, cfg).mine(dup, _encode=False)
+@pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
+def test_duplicate_ids_fall_back_to_string_ids(spark, generated, plan):
+    """Duplicated instance ids fail the injectivity check in the stats
+    aggregate; the miner must transparently mine on exact string ids,
+    matching the forced string-id result."""
+    dup = _duplicate_ids(generated.df)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    res_opt = getattr(eng.ColocationMiner(spark, cfg), plan)(dup)
+    res_str = getattr(eng.ColocationMiner(spark, cfg), plan)(dup, _encode=False)
     assert sorted(res_opt.patterns) == sorted(res_str.patterns)
+    assert res_opt.pair_count == res_str.pair_count
     for p in res_str.patterns:
         assert abs(res_opt.wpi[p] - res_str.wpi[p]) < 1e-12
 
 
-def test_resume_respects_checkpoint_encoding(spark, sample_instances, tmp_path):
+def test_resume_respects_checkpoint_encoding(spark, generated, tmp_path):
     """A fallback (string-id) run writes encode_ids=false manifests; a later
     resume must rebuild its edges with the same representation instead of
     joining string-id level tables against hashed-long edges."""
-    from pyspark.sql import functions as F
     import json
     import shutil
 
-    dup = sample_instances.withColumn(
-        "id", F.when(F.col("id") == "A2", F.lit("A1")).otherwise(F.col("id"))
-    )
+    dup = _duplicate_ids(generated.df)
     ck = str(tmp_path / "ck")
-    cfg = eng.ColocationConfig(5.0, 0.6, checkpoint_dir=ck)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev, checkpoint_dir=ck)
+    # an earlier encoded run on clean ids leaves encoded manifests behind
+    eng.ColocationMiner(spark, cfg).mine(generated.df)
     res_full = eng.ColocationMiner(spark, cfg).mine(dup)
     with open(os.path.join(ck, "level_2", "manifest.json")) as f:
         assert json.load(f)["lineage"]["encode_ids"] is False
+    with open(os.path.join(ck, "edges_manifest.json")) as f:
+        assert json.load(f)["encode_ids"] is False
     shutil.rmtree(os.path.join(ck, "level_3"))
     res_resumed = eng.ColocationMiner(spark, cfg).mine(dup, resume=True)
     assert sorted(res_resumed.patterns) == sorted(res_full.patterns)
+    assert res_resumed.wpi == res_full.wpi
     assert res_resumed.pair_count == res_full.pair_count
 
 
-def test_approx_participation_matches_exact_on_sample(spark, sample_instances):
-    import efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark as eng
-
+def test_approx_participation_matches_exact_on_sample(spark, generated):
     exact = eng.ColocationMiner(
-        spark, eng.ColocationConfig(5.0, 0.6)
-    ).mine(sample_instances)
+        spark, eng.ColocationConfig(generated.d, generated.min_prev)
+    ).mine(generated.df)
     approx = eng.ColocationMiner(
-        spark, eng.ColocationConfig(5.0, 0.6, approx_rsd=0.01)
-    ).mine(sample_instances)
+        spark, eng.ColocationConfig(generated.d, generated.min_prev, approx_rsd=0.01)
+    ).mine(generated.df)
     # Spark's HLL++ has no sparse mode, so tiny cardinalities are not
     # guaranteed exact in general — but the estimate is DETERMINISTIC for
     # identical inputs, and on this frozen fixture it reproduces the exact
@@ -288,43 +345,31 @@ def test_approx_participation_matches_exact_on_sample(spark, sample_instances):
     assert approx.pair_count == exact.pair_count
 
 
-def test_mine_auto_picks_levelwise_below_threshold(spark, sample_instances):
-    """Small input: auto must produce the golden result via the level-wise
+def test_mine_auto_picks_levelwise_below_threshold(spark, generated):
+    """Small input: auto must produce the oracle's result via the level-wise
     plan (no subtree checkpoint layout is ever created)."""
-    cfg = eng.ColocationConfig(5.0, 0.6)
-    res = eng.ColocationMiner(spark, cfg).mine_auto(sample_instances)
-    assert {frozenset(p) for p in res.patterns} == GOLD_SAMPLE
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    _assert_oracle(eng.ColocationMiner(spark, cfg).mine_auto(generated.df), generated)
 
 
-def test_mine_auto_forced_subtree_same_result(spark, sample_instances):
+def test_mine_auto_forced_subtree_same_result(spark, generated):
     """An n_instances hint at/above the threshold routes to the subtree
     plan — output must be identical (Lemma 5/6 equivalence)."""
-    cfg = eng.ColocationConfig(5.0, 0.6)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
     miner = eng.ColocationMiner(spark, cfg)
-    res = miner.mine_auto(
-        sample_instances, n_instances=miner.AUTO_SUBTREE_THRESHOLD
-    )
-    assert {frozenset(p) for p in res.patterns} == GOLD_SAMPLE
-    assert sorted(res.wpi) == sorted(
-        miner.mine(sample_instances).wpi
-    )
+    res = miner.mine_auto(generated.df, n_instances=miner.AUTO_SUBTREE_THRESHOLD)
+    _assert_oracle(res, generated)
 
 
-def test_mine_auto_resume_follows_existing_plan(spark, sample_instances, tmp_path):
+def test_mine_auto_resume_follows_existing_plan(spark, generated, tmp_path):
     """resume=True with existing LEVEL-WISE manifests must resume
     level-wise even when the size hint says subtree — the checkpoint
     layouts differ and switching plans would restart from scratch."""
-    import os
-
     ck = str(tmp_path / "auto_ck")
-    cfg = eng.ColocationConfig(5.0, 0.6, checkpoint_dir=ck)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev, checkpoint_dir=ck)
     miner = eng.ColocationMiner(spark, cfg)
-    res_full = miner.mine(sample_instances)
-    res_resumed = miner.mine_auto(
-        sample_instances, resume=True, n_instances=10**9
-    )
-    assert {frozenset(p) for p in res_resumed.patterns} == {
-        frozenset(p) for p in res_full.patterns
-    }
+    miner.mine(generated.df)
+    res_resumed = miner.mine_auto(generated.df, resume=True, n_instances=10**9)
+    _assert_oracle(res_resumed, generated)
     # still a level-wise checkpoint tree: no subtree dirs were created
     assert not [d for d in os.listdir(ck) if d.startswith("subtree_")]

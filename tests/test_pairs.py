@@ -23,15 +23,14 @@ def test_sample_data_48_pairs(spark, sample_instances):
     assert pairs.count() == 48
 
 
-def test_pairs_match_brute_force(spark, sample_instances):
-    rows = [(r.feature, r.id, r.x, r.y) for r in sample_instances.collect()]
-    expected = oracle.brute_force_pairs(rows, D)
-    got = _pair_set(neighbor_pairs(sample_instances, D))
+def test_pairs_match_brute_force(spark, generated):
+    expected = oracle.brute_force_pairs(generated.rows, D)
+    got = _pair_set(neighbor_pairs(generated.df, D))
     assert got == expected
 
 
-def test_pairs_canonical_orientation(spark, sample_instances):
-    for r in neighbor_pairs(sample_instances, D).collect():
+def test_pairs_canonical_orientation(spark, generated):
+    for r in neighbor_pairs(generated.df, D).collect():
         assert r["a_id"] < r["b_id"]
         assert r["a_feature"] != r["b_feature"]
         assert r["dist"] <= D
@@ -47,10 +46,34 @@ def test_pairs_canonical_orientation(spark, sample_instances):
         dict(adaptive_cell_split=True, salt_threshold=3),
     ],
 )
-def test_physical_knobs_output_invariant(spark, sample_instances, kwargs):
-    base = _pair_set(neighbor_pairs(sample_instances, D))
-    got = _pair_set(neighbor_pairs(sample_instances, D, **kwargs))
+def test_physical_knobs_output_invariant(spark, generated, kwargs):
+    base = _pair_set(neighbor_pairs(generated.df, D))
+    got = _pair_set(neighbor_pairs(generated.df, D, **kwargs))
     assert got == base
+
+
+@pytest.mark.parametrize("salt_threshold,cell_size", [(50_000, D), (2, D), (1, D / 2)])
+def test_miner_stats_hot_cells_cover_every_hot_cell(spark, generated, salt_threshold, cell_size):
+    """The miner's stats aggregate hands the pair join an origin-anchored
+    grid and its hot cells: every cell above the threshold is salted, and
+    the pairs equal the brute force with no job in the pair operator."""
+    import math
+    from collections import Counter
+
+    cfg = eng.ColocationConfig(
+        D, 0.3, cell_size=cell_size, salt_threshold=salt_threshold, salt_buckets=3
+    )
+    miner = eng.ColocationMiner(spark, cfg)
+    miner._stats(generated.df)
+    grid, hot = miner._pair_plan
+    occupancy = Counter(
+        (math.floor(x / cell_size), math.floor(y / cell_size)) for _, _, x, y in generated.rows
+    )
+    assert sorted(hot) == sorted(
+        (cx, cy, n) for (cx, cy), n in occupancy.items() if n > salt_threshold
+    )
+    assert (salt_threshold > 1000) == (not hot)
+    assert _pair_set(miner.build_pairs(generated.df)) == oracle.brute_force_pairs(generated.rows, D)
 
 
 def test_hot_cells_local_cap_keeps_heaviest(spark):

@@ -34,43 +34,31 @@ def _load(name):
 scaling = _load("scaling")
 
 
-# The default workload must keep its witness anchors: they are the
-# historical steady floors measured across rounds 2-6 (BASELINE.md
-# throughput table) and the witness path is only sound against them.
-def test_default_workload_has_witness_refs():
-    assert scaling.WITNESS_REF == {2: 350.8, 8: 96.1, 32: 44.0}
-    assert 0.0 < scaling.WITNESS_TOL <= 0.15
-
-
+# ``wall`` is the leg's wall and ``ref`` the steady floor the retired
+# witness path compared it against (None: no floor).  Neither may decide
+# acceptance any more: only the two bracketing controls do.
 @pytest.mark.parametrize(
     "pre,post,wall,ref,expect",
     [
-        # the strict sandwich path: both controls clean accepts any wall
+        # both controls clean accepts any wall
         (True, True, 500.0, 96.1, True),
         (True, True, 100.0, None, True),
-        # witness path: steady-floor wall survives a dirty post-control
-        (True, False, 100.0, 96.1, True),   # 100 <= 96.1*1.12
-        (False, False, 100.0, 96.1, True),  # even a dirty launch window
-        # witness bound is exclusive above tol
-        (True, False, 108.0, 96.1, False),  # 108 > 107.6
-        (True, False, 141.0, 96.1, False),  # the observed micro-wave case
-        # no witness ref (non-default workload): sandwich only
+        # a wall at the old steady floor no longer rescues a dirty window
+        (True, False, 100.0, 96.1, False),
+        (False, False, 100.0, 96.1, False),
+        # walls above the old floor, or without one, stay rejected
+        (True, False, 108.0, 96.1, False),
+        (True, False, 141.0, 96.1, False),
         (True, False, 1.0, None, False),
         (False, True, 1.0, None, False),
     ],
 )
 def test_acceptance_decision_table(pre, post, wall, ref, expect):
-    accepted, reason = scaling.decide_acceptance(pre, post, wall, ref, 0.12)
-    assert accepted is expect, reason
-    if accepted and not (pre and post):
-        assert "witness" in reason
-    if accepted and pre and post:
+    accepted, reason = scaling.decide_acceptance(pre, post)
+    assert accepted is expect, (wall, ref, reason)
+    assert "witness" not in reason
+    if accepted:
         assert reason == "both controls clean"
-
-
-def test_witness_bound_matches_reason_text():
-    accepted, reason = scaling.decide_acceptance(True, False, 107.0, 96.1, 0.12)
-    assert accepted and "107.6" in reason
 
 
 # The round-7 campaign artifact this harness produced: pin its shape so
@@ -114,51 +102,6 @@ def test_control_clean_requires_all_three_checks():
     assert control.BW_MIN_FRAC == pytest.approx(0.6)
     assert control._bw_ref(8) == pytest.approx(73.0)
     assert control._bw_ref(2) == pytest.approx(19.6)
-
-
-# --- witness-floor validity precondition (round-7 verdict #4, mechanized) ---
-def test_witness_refs_disabled_on_mining_path_hash_mismatch():
-    """A mining-path edit must disable the witness acceptance path until
-    the floors are re-anchored — a faster miner would otherwise ride the
-    stale floors through a wave and self-accept dirty windows."""
-    refs, reason = scaling._load_witness_refs(
-        True, current_hash="0000000000000000"
-    )
-    assert refs == {}
-    assert "re-anchor" in reason
-
-
-def test_witness_refs_enabled_when_hash_matches_anchor():
-    refs, reason = scaling._load_witness_refs(
-        True, current_hash=scaling.mining_path_hash()
-    )
-    assert refs == {2: 350.8, 8: 96.1, 32: 44.0}
-    assert reason is None
-
-
-def test_witness_refs_disabled_without_floors_file(tmp_path):
-    refs, reason = scaling._load_witness_refs(
-        True, floors_path=str(tmp_path / "missing.json")
-    )
-    assert refs == {}
-    assert "unusable" in reason
-
-
-def test_witness_refs_disabled_for_non_default_workload():
-    refs, reason = scaling._load_witness_refs(False)
-    assert refs == {}
-    assert "non-default" in reason
-
-
-def test_current_tree_hash_matches_anchor():
-    """The pinned anchor must track the actual tree: if this fails, a
-    mining-path file changed — re-anchor BENCH/witness_floors.json from
-    sandwich-accepted runs (do NOT just bump the hash)."""
-    import json
-
-    with open(os.path.join(_BENCH, "witness_floors.json")) as f:
-        pinned = json.load(f)["mining_path_sha256_16"]
-    assert scaling.mining_path_hash() == pinned
 
 
 # ---- bench.py's rerun-headline rule (late-r08: rerun tiebreak on clean
@@ -274,15 +217,3 @@ def test_watch_single_ref_override_calibration_and_fallback(monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_WATCH_LAT_SINGLE_NS")
     monkeypatch.setattr(pml, "chase", _boom)
     assert watch.single_ref_ns() == watch.BEST_SINGLE_NS
-
-
-def test_per_core_shuffle_disables_witness_floors(monkeypatch):
-    """Per-core shuffle sizing is a workload-affecting override: the
-    witness floors were measured under fixed-64 and must not accept
-    per-core walls (BENCH/probe_shuffle_ab_32.json shows the 32-wide
-    wall differs >2x between the two configs)."""
-    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PER_CORE", "16")
-    fresh = _load("scaling")
-    assert fresh._DEFAULT_WORKLOAD is False
-    assert fresh.WITNESS_REF == {}
-    assert "non-default workload" in fresh.WITNESS_DISABLED_REASON
