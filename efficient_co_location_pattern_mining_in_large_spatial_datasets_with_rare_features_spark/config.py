@@ -9,20 +9,23 @@ is intentionally absent here.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import math
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
 class ColocationConfig:
     """All knobs for one mining run.
 
-    Semantics knobs (affect the result set):
+    Semantics knobs (affect the result set; checked on construction):
 
-    - ``neighbor_distance``: Euclidean threshold *d*; the neighbor predicate
-      is inclusive (``dist <= d``, reference src/spatial_index.cpp:83,102).
-    - ``min_prevalence``: WPI threshold (reference src/miner.cpp:424).
-    - ``max_pattern_size``: stop the level-wise loop after size-k patterns
-      (None = run until no prevalent patterns remain, reference behavior).
+    - ``neighbor_distance``: Euclidean threshold *d*, finite and > 0; the
+      neighbor predicate is inclusive (``dist <= d``, reference
+      src/spatial_index.cpp:83,102).
+    - ``min_prevalence``: finite WPI threshold (reference src/miner.cpp:424).
+    - ``max_pattern_size``: stop the level-wise loop after size-k patterns,
+      k >= 2 (None = run until no prevalent patterns remain, reference
+      behavior).
 
     Physical knobs (must never change the result set):
 
@@ -50,7 +53,6 @@ class ColocationConfig:
     adaptive_cell_split: bool = False
 
     checkpoint_dir: str | None = None
-    persist_intermediates: bool = True
 
     #: opt-in HyperLogLog++ participation counts: relative standard
     #: deviation for ``approx_count_distinct`` (e.g. 0.01), or None for the
@@ -61,6 +63,15 @@ class ColocationConfig:
     #: may flip relative to the exact run — use for exploratory passes,
     #: never for golden comparisons.
     approx_rsd: float | None = None
+
+    def __post_init__(self) -> None:
+        d, mp, cap = self.neighbor_distance, self.min_prevalence, self.max_pattern_size
+        if not (math.isfinite(d) and d > 0):
+            raise ValueError(f"neighbor_distance must be finite and > 0, got {d}")
+        if not math.isfinite(mp):
+            raise ValueError(f"min_prevalence must be finite, got {mp}")
+        if cap is not None and cap < 2:
+            raise ValueError(f"max_pattern_size must be None or >= 2, got {cap}")
 
     def effective_cell_size(self) -> float:
         c = self.cell_size if self.cell_size is not None else self.neighbor_distance

@@ -37,14 +37,9 @@ def sample_instances(spark):
     return load_instances_csv(spark, path).persist()
 
 
-@pytest.fixture(scope="session")
-def generated(spark):
-    """A generated dataset that mines up to size-4 patterns, with the
-    brute-force oracle's answer: ``df``, ``rows``, ``d``, ``min_prev``,
-    ``patterns`` (the prevalent set) and ``info`` (counts, delta, pairs,
-    wpi)."""
+def _generated(spark, seed: int, n_features: int, n_instances: int, extent: float):
     rows = oracle.make_random_dataset(
-        np.random.default_rng(11), n_features=4, n_instances=60, extent=18.0
+        np.random.default_rng(seed), n_features=n_features, n_instances=n_instances, extent=extent
     )
     d, min_prev = 4.0, 0.3
     patterns, info = oracle.brute_force_mine(rows, d, min_prev)
@@ -52,3 +47,19 @@ def generated(spark):
     return SimpleNamespace(
         df=df.persist(), rows=rows, d=d, min_prev=min_prev, patterns=patterns, info=info
     )
+
+
+@pytest.fixture(scope="session")
+def generated(spark):
+    """A generated dataset that mines up to size-4 patterns, with the
+    brute-force oracle's answer: ``df``, ``rows``, ``d``, ``min_prev``,
+    ``patterns`` (the prevalent set) and ``info`` (counts, delta, pairs,
+    wpi)."""
+    return _generated(spark, 11, n_features=4, n_instances=60, extent=18.0)
+
+
+@pytest.fixture(scope="session")
+def generated_wide(spark):
+    """Like ``generated``, with six features: patterns up to size 4, and
+    size-3 patterns under four different rarest features."""
+    return _generated(spark, 7, n_features=6, n_instances=48, extent=14.0)

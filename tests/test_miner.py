@@ -57,6 +57,17 @@ def _assert_oracle(res, g) -> None:
     assert abs(res.delta - g.info["delta"]) < 1e-12
 
 
+def _jobs_under_group(spark, group: str, fn):
+    """``fn()`` and the number of Spark jobs it ran under job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _duplicate_ids(df):
     """A2 renamed to A1: one id shared by two instances of feature A."""
     from pyspark.sql import functions as F
@@ -96,20 +107,32 @@ def test_mine_launches_every_job_on_the_caller_thread(spark, generated):
     group, so none comes from a background thread, and the mine stays at
     its pinned job count: one action per level, none before the pair
     join.  A new collect in the miner shows up here."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "test-mine-job-count"
+    tracker = spark.sparkContext.statusTracker()
     cfg = eng.ColocationConfig(generated.d, generated.min_prev)
     ungrouped = set(tracker.getJobIdsForGroup(None))
-    sc.setJobGroup(group, "mine under a job group")
-    try:
-        res = eng.ColocationMiner(spark, cfg).mine(generated.df)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    res, jobs = _jobs_under_group(
+        spark, "test-mine-job-count", lambda: eng.ColocationMiner(spark, cfg).mine(generated.df)
+    )
     _assert_oracle(res, generated)
     assert max(len(p) for p in res.patterns) == 4
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
-    assert len(tracker.getJobIdsForGroup(group)) <= MINE_JOB_BOUND
+    assert jobs <= MINE_JOB_BOUND
+
+
+def test_duplicate_id_fallback_launches_no_extra_jobs(spark, generated):
+    """The string-id fallback reuses the stats aggregate and mines once,
+    so it launches no more jobs than a mine forced onto string ids."""
+    dup = _duplicate_ids(generated.df)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    fallback, n_fallback = _jobs_under_group(
+        spark, "test-fallback-jobs", lambda: eng.ColocationMiner(spark, cfg).mine(dup)
+    )
+    forced, n_forced = _jobs_under_group(
+        spark, "test-forced-string-id-jobs",
+        lambda: eng.ColocationMiner(spark, cfg).mine(dup, _encode=False),
+    )
+    assert fallback.patterns == forced.patterns and fallback.wpi == forced.wpi
+    assert 0 < n_fallback <= n_forced
 
 
 @pytest.mark.parametrize("coord,bad", [("x", float("nan")), ("x", None), ("y", float("-inf"))])
@@ -277,6 +300,52 @@ def test_max_pattern_size_cap(spark, generated):
     cfg = eng.ColocationConfig(generated.d, generated.min_prev, max_pattern_size=2)
     res = eng.ColocationMiner(spark, cfg).mine(generated.df)
     assert {tuple(p) for p in res.patterns} == {p for p in generated.patterns if len(p) == 2}
+
+
+@pytest.mark.parametrize("checkpoint", [False, True])
+@pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
+def test_plans_match_oracle_on_six_features(spark, generated_wide, tmp_path, plan, checkpoint):
+    """Both plans, in memory and checkpointed, on six features where
+    several root subtrees reach size 3: every subtree scope starts from the
+    one global level 2, whose checkpoint both plans share."""
+    g = generated_wide
+    assert len({p[0] for p in g.patterns if len(p) == 3}) >= 2
+    ck = str(tmp_path / "ck") if checkpoint else None
+    cfg = eng.ColocationConfig(g.d, g.min_prev, checkpoint_dir=ck)
+    res = getattr(eng.ColocationMiner(spark, cfg), plan)(g.df)
+    _assert_oracle(res, g)
+    assert [lv.k for lv in res.levels].count(2) == 1
+    if checkpoint:
+        assert os.path.isfile(os.path.join(ck, "level_2", "manifest.json"))
+        subtrees = [d for d in os.listdir(ck) if d.startswith("subtree_")]
+        if plan == "mine":
+            assert not subtrees
+        else:
+            assert len(subtrees) >= 2
+            for d in subtrees:
+                assert sorted(os.listdir(os.path.join(ck, d)))[0] == "level_3"
+
+
+def test_levelwise_checkpoint_resumes_under_subtree_plan(spark, generated_wide, tmp_path):
+    """A ``mine()`` checkpoint that lost level 3 resumes under
+    ``mine_subtrees``: the subtree scopes start from the shared level 2
+    instead of mining it again."""
+    import json
+    import shutil
+
+    g = generated_wide
+    ck = str(tmp_path / "ck")
+    cfg = eng.ColocationConfig(g.d, g.min_prev, checkpoint_dir=ck)
+    eng.ColocationMiner(spark, cfg).mine(g.df)
+    shutil.rmtree(os.path.join(ck, "level_3"))
+    level2 = os.path.join(ck, "level_2", "manifest.json")
+    with open(level2) as f:
+        written_at = json.load(f)["lineage"]["written_at"]
+    res = eng.ColocationMiner(spark, cfg).mine_subtrees(g.df, resume=True)
+    _assert_oracle(res, g)
+    assert min(lv.k for lv in res.levels) == 3
+    with open(level2) as f:
+        assert json.load(f)["lineage"]["written_at"] == written_at
 
 
 def test_subtree_plan_matches_levelwise_sample(spark, generated):
