@@ -36,11 +36,8 @@ class ColocationConfig:
       src/spatial_index.cpp:63-73).
     - ``salt_threshold``: cells holding more instances than this are "hot"
       and their probe side is split into ``salt_buckets`` hash buckets so a
-      dense city-center cell does not serialize into one task.
-    - ``adaptive_cell_split``: when True, the pair stage samples cell
-      occupancy first and, if the densest cell exceeds ``salt_threshold``,
-      re-grids at a finer ``cell_size`` (cell halving) before salting —
-      the "adaptive cell split" path.
+      dense city-center cell does not serialize into one task.  Salting is
+      the pair join's only skew handling (operators/pairs.py).
     """
 
     neighbor_distance: float
@@ -50,7 +47,6 @@ class ColocationConfig:
     cell_size: float | None = None
     salt_threshold: int = 50_000
     salt_buckets: int = 8
-    adaptive_cell_split: bool = False
 
     checkpoint_dir: str | None = None
 

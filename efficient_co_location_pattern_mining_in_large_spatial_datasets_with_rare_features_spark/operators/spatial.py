@@ -16,8 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ._ckpt import unpersist_ckpt as _unpersist_ckpt
-from .cells import GridSpec, with_cell
-from .pairs import hot_cells_local
+from .cells import GridSpec
+from .pairs import _count_hot_cells, _spread, _stencil_join, full_offsets
 
 
 def point_in_polygon(
@@ -359,36 +359,29 @@ def distance_join(
     distance ``d`` (inclusive).
 
     Both inputs are point tables ``(id string, x double, y double)``
-    (extra columns are dropped).  Unlike the monochromatic
-    ``neighbor_pairs`` self-join (reference src/spatial_index.cpp:43-114),
-    the two sides are distinct tables, so the stencil is the FULL
-    (2r+1)^2 neighborhood probed from the left side only — each (l, r)
-    pair meets in exactly one (right-point cell), no dedup or tie-break
-    needed.  The grid is computed over the union of both bounding boxes
+    (extra columns are dropped).  This is the package's one stencil join
+    (``pairs._stencil_join``) in its two-table form: unlike the
+    monochromatic ``neighbor_pairs`` self-join, the sides are distinct
+    tables, so the left side probes the FULL (2r+1)^2 neighborhood and
+    each (l, r) pair meets in exactly one (right-point cell), with no
+    dedup or tie-break.  The grid spans the union of both bounding boxes
     so the clamped cell encoding stays consistent across sides.
 
     Skew: a one-side-hot cell lands in single sort-merge partitions that
     AQE's skew-join splitting (enabled engine-wide, session.py) re-chunks
-    at runtime.  A *dual-hot* cell — more than ``salt_threshold`` points
-    on BOTH sides — is salted explicitly (same output-invariant scheme as
-    neighbor_pairs): right-side rows in such a cell get a hash bucket
-    ``xxhash64(id) % salt_buckets`` appended to the join key, left-side
-    probes targeting it replicate over all buckets, splitting the
-    |L_cell| x |R_cell| candidate work across ``salt_buckets`` tasks.
-    Cells hot on at most one side pay nothing (bucket = -1 both sides).
+    at runtime.  Only a *dual-hot* cell — more than ``salt_threshold``
+    points on BOTH sides — is salted, splitting its |L_cell| x |R_cell|
+    candidate work across ``salt_buckets`` tasks; the cells are counted
+    only when both inputs exceed the threshold outright.
     ``salt_threshold=None`` disables salting.
 
     Output: ``(a_id, a_x, a_y, b_id, b_x, b_y, dist)`` with a = left,
     b = right (no canonical flip — the sides are semantically distinct).
     """
-    if cell_size is None:
-        cell_size = d
-    if not (0 < cell_size <= d):
-        raise ValueError(f"cell_size must be in (0, d], got {cell_size} for d={d}")
     lpts = left.select("id", "x", "y")
     rpts = right.select("id", "x", "y")
     # one pass for bounds AND per-side counts (the counts gate the dual-hot
-    # pre-scan below; fusing them here makes the gate metadata-cheap)
+    # count below, so the common small case skips it)
     tagged = lpts.withColumn("_l", F.lit(1)).unionByName(
         rpts.withColumn("_l", F.lit(0))
     )
@@ -400,109 +393,21 @@ def distance_join(
         F.sum("_l").alias("nl"),
         F.count("*").alias("nt"),
     ).collect()[0]
+    cell = d if cell_size is None else cell_size
     if b["min_x"] is None:
-        grid = GridSpec(0.0, 0.0, 0.0, 0.0, cell_size)
+        grid = GridSpec(0.0, 0.0, 0.0, 0.0, cell)
         n_left, n_right = 0, 0
     else:
-        grid = GridSpec(b["min_x"], b["min_y"], b["max_x"], b["max_y"], cell_size)
+        grid = GridSpec(b["min_x"], b["min_y"], b["max_x"], b["max_y"], cell)
         n_left = int(b["nl"] or 0)
         n_right = int(b["nt"]) - n_left
 
-    parallelism = left.sparkSession.sparkContext.defaultParallelism
-    if lpts.rdd.getNumPartitions() < parallelism:
-        lpts = lpts.repartition(parallelism)
-    if rpts.rdd.getNumPartitions() < parallelism:
-        rpts = rpts.repartition(parallelism)
-
-    hot_cells: DataFrame | None = None
-    # a dual-hot cell needs > salt_threshold rows on BOTH sides, which is
-    # impossible unless both inputs exceed the threshold outright — skip
-    # the two occupancy aggregations entirely for the common small case
+    lpts, rpts = _spread(lpts), _spread(rpts)
+    hot = None
     if salt_threshold is not None and min(n_left, n_right) > salt_threshold:
-        locc = (
-            with_cell(lpts, grid)
-            .groupBy("cell_x", "cell_y")
-            .agg(F.count("*").alias("lc"))
-            .filter(F.col("lc") > salt_threshold)
-        )
-        rocc = (
-            with_cell(rpts, grid)
-            .groupBy("cell_x", "cell_y")
-            .agg(F.count("*").alias("rc"))
-            .filter(F.col("rc") > salt_threshold)
-        )
-        # dual-hot only; weight = candidate work the cell would generate
-        hot_cells = hot_cells_local(
-            locc.join(rocc, ["cell_x", "cell_y"]).select(
-                "cell_x", "cell_y", (F.col("lc") * F.col("rc")).alias("weight")
-            )
-        )
-
-    reach = max(1, math.ceil(d / grid.cell_size - 1e-12))
-    offsets = [
-        (ox, oy)
-        for ox in range(-reach, reach + 1)
-        for oy in range(-reach, reach + 1)
-    ]
-    off_array = F.array(
-        *[F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy")) for ox, oy in offsets]
-    )
-    probe = with_cell(lpts, grid).withColumn("_off", F.explode(off_array)).select(
-        F.col("id").alias("a_id"),
-        F.col("x").alias("a_x"),
-        F.col("y").alias("a_y"),
-        (F.col("cell_x") + F.col("_off.ox")).alias("t_cx"),
-        (F.col("cell_y") + F.col("_off.oy")).alias("t_cy"),
-    )
-    build = with_cell(rpts, grid).select(
-        F.col("id").alias("b_id"),
-        F.col("x").alias("b_x"),
-        F.col("y").alias("b_y"),
-        F.col("cell_x").alias("t_cx"),
-        F.col("cell_y").alias("t_cy"),
-    )
-    if hot_cells is not None:
-        hot_t = F.broadcast(
-            hot_cells.select(
-                F.col("cell_x").alias("t_cx"),
-                F.col("cell_y").alias("t_cy"),
-                F.lit(True).alias("_hot"),
-            )
-        )
-        build = (
-            build.join(hot_t, ["t_cx", "t_cy"], "left")
-            .withColumn(
-                "bucket",
-                F.when(
-                    F.col("_hot").isNotNull(),
-                    F.pmod(F.xxhash64("b_id"), F.lit(salt_buckets)).cast("int"),
-                ).otherwise(F.lit(-1)),
-            )
-            .drop("_hot")
-        )
-        buckets_all = F.array(*[F.lit(i) for i in range(salt_buckets)])
-        probe = (
-            probe.join(hot_t, ["t_cx", "t_cy"], "left")
-            .withColumn(
-                "bucket",
-                F.explode(
-                    F.when(F.col("_hot").isNotNull(), buckets_all).otherwise(
-                        F.array(F.lit(-1))
-                    )
-                ),
-            )
-            .drop("_hot")
-        )
-        join_keys = ["t_cx", "t_cy", "bucket"]
-    else:
-        join_keys = ["t_cx", "t_cy"]
-    dist = F.sqrt(
-        (F.col("a_x") - F.col("b_x")) ** 2 + (F.col("a_y") - F.col("b_y")) ** 2
-    )
-    return (
-        probe.join(build, join_keys)
-        .filter(dist <= F.lit(float(d)))
-        .select("a_id", "a_x", "a_y", "b_id", "b_x", "b_y", dist.alias("dist"))
+        hot = _count_hot_cells(grid, salt_threshold, lpts, rpts)
+    return _stencil_join(lpts, rpts, grid, d, full_offsets, hot, salt_buckets).select(
+        "a_id", "a_x", "a_y", "b_id", "b_x", "b_y", "dist"
     )
 
 

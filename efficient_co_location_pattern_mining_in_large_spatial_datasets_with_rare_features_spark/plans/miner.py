@@ -355,8 +355,8 @@ class ColocationMiner:
         ``join_check()`` returns False, so the caller mines with exact
         string ids instead."""
         cfg = self.config
-        grid = None if cfg.adaptive_cell_split else origin_grid(cfg.effective_cell_size())
-        salt = cfg.salt_threshold if grid is not None else None
+        grid = origin_grid(cfg.effective_cell_size())
+        salt = cfg.salt_threshold
         x, y = F.col("x"), F.col("y")
         bad = x.isNull() | y.isNull() | F.isnan(x) | F.isnan(y)
         bad = bad | (F.abs(x) == float("inf")) | (F.abs(y) == float("inf"))
@@ -392,7 +392,7 @@ class ColocationMiner:
                 + ", ".join(f"feature {f!r}: {n}" for f, n in bad_features)
             )
         hot = [(r["cell_x"], r["cell_y"], r["n"]) for r in of.get("cell", [])]
-        self._pair_plan = (grid, hot if grid is not None else None)
+        self._pair_plan = (grid, hot)
         injective = not of.get("hash")
         counts = {r["feature"]: r["n"] for r in of["feature"]}
         rank = {f: i for i, f in enumerate(measures.rank_features(counts))}
@@ -498,8 +498,7 @@ class ColocationMiner:
         return edges.repartition(nparts, "center_id", "nbr_feature")
 
     def build_pairs(self, instances: DataFrame) -> DataFrame:
-        """Neighbor pairs on the grid and hot cells ``_stats`` counted (or,
-        with adaptive cell split, on the operator's own bounds grid)."""
+        """Neighbor pairs on the grid and hot cells ``_stats`` counted."""
         cfg = self.config
         grid, hot = self._pair_plan
         return neighbor_pairs(
@@ -508,7 +507,6 @@ class ColocationMiner:
             cell_size=cfg.effective_cell_size(),
             salt_threshold=cfg.salt_threshold,
             salt_buckets=cfg.salt_buckets,
-            adaptive_cell_split=cfg.adaptive_cell_split,
             grid=grid,
             hot_cells=hot,
         )

@@ -3,9 +3,12 @@ against a static reference corpus on the grid stencil.
 
 The core mining join (operators/pairs.py) in its live form: each arriving
 instance emits every static instance of a different feature within ``d``.
-A stream-static inner join is STATELESS — no watermark or state store; each
-micro-batch plans the same cell-keyed hash join the batch operator uses, so
-the scale properties (stencil equi-join, no theta join) carry over 1:1.
+It is the package's one stencil join (``pairs._stencil_join``) with the
+arriving stream as the probe side over the full (2r+1)^2 neighborhood and
+the static corpus as the build side, without salting.  A stream-static
+inner join is STATELESS — no watermark or state store; each micro-batch
+plans the same cell-keyed hash join the batch operator uses, so the scale
+properties (stencil equi-join, no theta join) carry over 1:1.
 
 Determinism contract: draining a static directory with
 ``trigger(availableNow=True)`` yields exactly the batch neighbor-pair set,
@@ -16,12 +19,11 @@ the SQL oracle by the ``pairs_stream_backfill`` entry).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cells import GridSpec, with_cell
+from ..operators.cells import GridSpec
+from ..operators.pairs import _stencil_join, full_offsets
 
 INSTANCE_STREAM_SCHEMA = "feature string, id string, x double, y double"
 
@@ -41,49 +43,14 @@ def streaming_neighbor_pairs(
     edge cells exactly like the batch path, so no arrival is ever silently
     dropped.
     """
-    if grid.cell_size > d:
-        raise ValueError(
-            f"grid cell_size ({grid.cell_size}) must be <= d ({d})"
-        )
-    reach = max(1, math.ceil(d / grid.cell_size - 1e-12))
     stream = (
         spark.readStream.schema(INSTANCE_STREAM_SCHEMA)
         .option("maxFilesPerTrigger", 16)
         .parquet(source_dir)
     )
-    build = with_cell(static_instances, grid).select(
-        F.col("feature").alias("b_feature"),
-        F.col("id").alias("b_id"),
-        F.col("x").alias("b_x"),
-        F.col("y").alias("b_y"),
-        F.col("cell_x").alias("t_cx"),
-        F.col("cell_y").alias("t_cy"),
-    )
-    offs = F.array(
-        *[
-            F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"))
-            for ox in range(-reach, reach + 1)
-            for oy in range(-reach, reach + 1)
-        ]
-    )
-    probe = with_cell(stream, grid).withColumn("_o", F.explode(offs)).select(
-        F.col("feature").alias("a_feature"),
-        F.col("id").alias("a_id"),
-        F.col("x").alias("a_x"),
-        F.col("y").alias("a_y"),
-        (F.col("cell_x") + F.col("_o.ox")).alias("t_cx"),
-        (F.col("cell_y") + F.col("_o.oy")).alias("t_cy"),
-    )
-    dist = F.sqrt(
-        (F.col("a_x") - F.col("b_x")) ** 2 + (F.col("a_y") - F.col("b_y")) ** 2
-    )
+    static = static_instances.select("feature", "id", "x", "y")
     return (
-        probe.join(build, ["t_cx", "t_cy"])
-        .filter(
-            (F.col("a_feature") != F.col("b_feature"))
-            & (dist <= F.lit(float(d)))
-        )
-        .select(
-            "a_feature", "a_id", "b_feature", "b_id", dist.alias("dist")
-        )
+        _stencil_join(stream, static, grid, d, full_offsets)
+        .filter(F.col("a_feature") != F.col("b_feature"))
+        .select("a_feature", "a_id", "b_feature", "b_id", "dist")
     )

@@ -4,15 +4,15 @@ with OTHER arriving events within distance ``d`` AND event-time gap
 (neighbor_pairs + time filter), and the one streaming shape the
 stream-static join cannot express (both sides are unbounded).
 
-Structured-Streaming mechanics: both sides are watermarked and the join
-condition carries an explicit event-time range
+Spatially it is ``neighbor_pairs``' self-join form (``pairs._self_pairs``)
+over the stream: the probe side explodes the forward half-neighborhood,
+the build side is keyed by its own cell, and the instance-key tie-break
+inside a cell makes each unordered pair meet exactly once — no post-join
+dedup.  Structured-Streaming mechanics: the stream is watermarked and the
+join condition carries an explicit event-time range
 (``b.ts BETWEEN a.ts - tau AND a.ts + tau``), so Spark bounds the join
 state store to rows inside watermark+tau instead of buffering the full
-streams — the requirement for running this join on an unbounded feed.
-Spatially it is the same grid-stencil equi-join as the batch operator:
-the probe side explodes the full (2r+1)^2 neighborhood, the build side is
-keyed by its own cell, and the ``a_id < b_id`` canonical filter makes each
-unordered pair meet exactly once (in b's cell) — no post-join dedup.
+stream — the requirement for running this join on an unbounded feed.
 
 Determinism contract: with ``trigger(availableNow=True)`` and a
 ``watermark_delay`` wider than the corpus' event-time spread, nothing is
@@ -24,12 +24,11 @@ batch query).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.cells import GridSpec, with_cell
+from ..operators.cells import GridSpec
+from ..operators.pairs import _self_pairs
 
 ST_STREAM_SCHEMA = "feature string, id string, x double, y double, ts timestamp"
 
@@ -44,66 +43,18 @@ def streaming_spatiotemporal_pairs(
 ) -> DataFrame:
     """Streaming DataFrame of (a_feature, a_id, b_feature, b_id, dist,
     dt_seconds): cross-feature pairs with Euclidean distance <= ``d``
-    (inclusive) and |event-time gap| <= ``tau_seconds``, canonical
-    ``a_id < b_id`` orientation."""
-    if grid.cell_size > d:
-        raise ValueError(
-            f"grid cell_size ({grid.cell_size}) must be <= d ({d})"
-        )
-    reach = max(1, math.ceil(d / grid.cell_size - 1e-12))
-
-    def src() -> DataFrame:
-        return (
-            spark.readStream.schema(ST_STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", 16)
-            .parquet(source_dir)
-            .withWatermark("ts", watermark_delay)
-        )
-
-    offs = F.array(
-        *[
-            F.struct(F.lit(ox).alias("ox"), F.lit(oy).alias("oy"))
-            for ox in range(-reach, reach + 1)
-            for oy in range(-reach, reach + 1)
-        ]
-    )
-    probe = with_cell(src(), grid).withColumn("_o", F.explode(offs)).select(
-        F.col("feature").alias("a_feature"),
-        F.col("id").alias("a_id"),
-        F.col("x").alias("a_x"),
-        F.col("y").alias("a_y"),
-        F.col("ts").alias("a_ts"),
-        (F.col("cell_x") + F.col("_o.ox")).alias("t_cx"),
-        (F.col("cell_y") + F.col("_o.oy")).alias("t_cy"),
-    )
-    build = with_cell(src(), grid).select(
-        F.col("feature").alias("b_feature"),
-        F.col("id").alias("b_id"),
-        F.col("x").alias("b_x"),
-        F.col("y").alias("b_y"),
-        F.col("ts").alias("b_ts"),
-        F.col("cell_x").alias("b_cx"),
-        F.col("cell_y").alias("b_cy"),
+    (inclusive) and |event-time gap| <= ``tau_seconds``, in
+    ``neighbor_pairs``' canonical orientation."""
+    events = (
+        spark.readStream.schema(ST_STREAM_SCHEMA)
+        .option("maxFilesPerTrigger", 16)
+        .parquet(source_dir)
+        .withWatermark("ts", watermark_delay)
     )
     tau = F.expr(f"INTERVAL {int(tau_seconds)} SECONDS")
-    dist = F.sqrt(
-        (F.col("a_x") - F.col("b_x")) * (F.col("a_x") - F.col("b_x"))
-        + (F.col("a_y") - F.col("b_y")) * (F.col("a_y") - F.col("b_y"))
-    )
-    joined = probe.join(
-        build,
-        (F.col("t_cx") == F.col("b_cx"))
-        & (F.col("t_cy") == F.col("b_cy"))
-        & (F.col("a_id") < F.col("b_id"))
-        & (F.col("a_feature") != F.col("b_feature"))
-        # event-time range on both watermarked columns: bounds join state
-        & (F.col("b_ts") >= F.col("a_ts") - tau)
-        & (F.col("b_ts") <= F.col("a_ts") + tau),
-    )
-    dt = F.abs(
-        F.unix_timestamp("a_ts") - F.unix_timestamp("b_ts")
-    ).cast("bigint")
-    return joined.filter(dist <= F.lit(float(d))).select(
-        "a_feature", "a_id", "b_feature", "b_id",
-        dist.alias("dist"), dt.alias("dt_seconds"),
+    # event-time range on both watermarked columns: bounds join state
+    within_tau = (F.col("b_ts") >= F.col("a_ts") - tau) & (F.col("b_ts") <= F.col("a_ts") + tau)
+    dt = F.abs(F.unix_timestamp("a_ts") - F.unix_timestamp("b_ts")).cast("bigint")
+    return _self_pairs(events, grid, d, condition=within_tau).select(
+        "a_feature", "a_id", "b_feature", "b_id", "dist", dt.alias("dt_seconds")
     )

@@ -10,7 +10,7 @@ Usage (local example; on a cluster swap --master and add executors):
         --distance 5 --min-prevalence 0.6 \
         --output /tmp/colocation_out \
         [--checkpoint-dir /tmp/ckpt] [--resume] [--max-k 4] \
-        [--cell-size C] [--salt-threshold N] [--adaptive-cell-split]
+        [--cell-size C] [--salt-threshold N] [--salt-buckets B]
 
 Inputs: ``--format csv`` (reference CSV layout), ``--format parquet``
 (instance table ``feature,id,x,y``), or ``--format images`` (image+caption
@@ -45,7 +45,6 @@ def main() -> None:
     ap.add_argument("--cell-size", type=float, default=None)
     ap.add_argument("--salt-threshold", type=int, default=50_000)
     ap.add_argument("--salt-buckets", type=int, default=8)
-    ap.add_argument("--adaptive-cell-split", action="store_true")
     ap.add_argument("--tiles", action="store_true", help="also write per-cell tile counts")
     ap.add_argument(
         "--plan",
@@ -102,7 +101,6 @@ def main() -> None:
         cell_size=args.cell_size,
         salt_threshold=args.salt_threshold,
         salt_buckets=args.salt_buckets,
-        adaptive_cell_split=args.adaptive_cell_split,
         checkpoint_dir=args.checkpoint_dir,
     )
 

@@ -76,10 +76,11 @@ def test_nesting_two_points_same_parent(spark):
     assert ps[0] == ps[1]
 
 
-def test_with_cell_id_on_instances(spark, sample_instances):
+def test_with_cell_id_on_instances(spark, generated):
     grid = GridSpec(0.0, 0.0, 10.0, 10.0, 2.5)
-    out = with_cell_id(sample_instances, grid, resolution=3)
+    out = with_cell_id(generated.df, grid, resolution=3)
     rows = out.collect()
+    assert len(rows) == len(generated.rows)
     assert all(cell_resolution_of(r.cell_id) == 3 for r in rows)
     # id is a pure function of the cell coordinates
     seen = {}

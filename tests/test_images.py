@@ -45,24 +45,24 @@ def test_dhash_stable_and_sensitive():
     assert -(2**63) <= a < 2**63
 
 
-def test_synthesize_then_derive_roundtrip(spark, sample_instances):
-    images = synthesize_image_table(sample_instances)
+def test_synthesize_then_derive_roundtrip(spark, generated):
+    images = synthesize_image_table(generated.df)
     assert images.schema.simpleString() == (
         "struct<image_id:string,bytes:binary,w:int,h:int,fmt:string,"
         "caption:string,phash:bigint>"
     )
     derived = derive_instances(images, verify=True)
-    orig = {(r.feature, r.id, r.x, r.y) for r in sample_instances.collect()}
+    orig = set(generated.rows)
     got = {(r.feature, r.id, r.x, r.y) for r in derived.collect()}
     assert got == orig  # exact doubles through repr() captions
     fmts = {r.fmt for r in images.select("fmt").distinct().collect()}
     assert fmts == {"png", "jpeg"}  # both codec paths exercised
 
 
-def test_derive_rejects_corrupt_payload(spark, sample_instances):
+def test_derive_rejects_corrupt_payload(spark, generated):
     from pyspark.sql import functions as F
 
-    images = synthesize_image_table(sample_instances)
+    images = synthesize_image_table(generated.df)
     corrupt = images.withColumn(
         "bytes", F.when(F.col("image_id") == "A1", F.lit(b"JUNK")).otherwise(F.col("bytes"))
     )
@@ -70,21 +70,24 @@ def test_derive_rejects_corrupt_payload(spark, sample_instances):
         derive_instances(corrupt, verify=True).collect()
 
 
-def test_mining_through_image_table_matches_direct(spark, sample_instances):
-    """Full-stack: image table -> derive -> mine == mine(instances)."""
-    derived = derive_instances(synthesize_image_table(sample_instances))
-    res = eng.ColocationMiner(spark, eng.ColocationConfig(5.0, 0.6)).mine(derived)
-    assert res.pair_count == 48 and len(res.patterns) == 7
+def test_mining_through_image_table_matches_direct(spark, generated):
+    """Full-stack: image table -> derive -> mine == the oracle's mine of
+    the instances."""
+    derived = derive_instances(synthesize_image_table(generated.df))
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev)
+    res = eng.ColocationMiner(spark, cfg).mine(derived)
+    assert res.pair_count == len(generated.info["pairs"])
+    assert {tuple(p) for p in res.patterns} == generated.patterns
 
 
-def test_phash_duplicates_matches_bruteforce(spark, sample_instances):
+def test_phash_duplicates_matches_bruteforce(spark, generated):
     import itertools
 
     from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark.operators.dedup import (
         phash_duplicates,
     )
 
-    images = synthesize_image_table(sample_instances)
+    images = synthesize_image_table(generated.df)
     sigs = {r.image_id: r.phash for r in images.select("image_id", "phash").collect()}
     for t in (0, 4, 10):
         got = {

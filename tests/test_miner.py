@@ -302,6 +302,25 @@ def test_max_pattern_size_cap(spark, generated):
     assert {tuple(p) for p in res.patterns} == {p for p in generated.patterns if len(p) == 2}
 
 
+def test_ids_repeating_across_features_mine_like_unique_ids(spark, generated):
+    """Ids need only be unique within a feature: with the feature prefix
+    stripped (A3 and B3 both become 3), a size-2 mine equals the oracle's
+    answer on the prefixed ids."""
+    from pyspark.sql import functions as F
+
+    stripped = generated.df.withColumn("id", F.expr("substring(id, 2)"))
+    assert stripped.select("id").distinct().count() < len(generated.rows)
+    cfg = eng.ColocationConfig(generated.d, generated.min_prev, max_pattern_size=2)
+    res = eng.ColocationMiner(spark, cfg).mine(stripped)
+    wpi = {p: w for p, w in generated.info["wpi"].items() if len(p) == 2}
+    assert {tuple(p) for p in res.patterns} == set(wpi)
+    assert res.wpi.keys() == wpi.keys()
+    for p, w in wpi.items():
+        assert abs(res.wpi[p] - w) < 1e-12, p
+    assert res.pair_count == len(generated.info["pairs"])
+    assert abs(res.delta - generated.info["delta"]) < 1e-12
+
+
 @pytest.mark.parametrize("checkpoint", [False, True])
 @pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
 def test_plans_match_oracle_on_six_features(spark, generated_wide, tmp_path, plan, checkpoint):

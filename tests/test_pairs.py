@@ -1,5 +1,5 @@
 """Neighbor-pair join: golden counts, brute-force set equality, and
-output-invariance of every physical knob (salting, cell size, adaptive split)."""
+output-invariance of every physical knob (salting, cell size)."""
 
 import numpy as np
 import pytest
@@ -43,7 +43,6 @@ def test_pairs_canonical_orientation(spark, generated):
         dict(salt_threshold=1, salt_buckets=3),
         dict(cell_size=D / 2),
         dict(cell_size=D / 3, salt_threshold=2, salt_buckets=2),
-        dict(adaptive_cell_split=True, salt_threshold=3),
     ],
 )
 def test_physical_knobs_output_invariant(spark, generated, kwargs):

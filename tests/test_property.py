@@ -80,23 +80,26 @@ def test_hamming_blocking_is_lossless(sigs, t):
 )
 def test_neighbor_pairs_exact_under_random_inputs(pts, d, cell_frac):
     """Grid stencil join == brute force for arbitrary point sets (duplicate
-    coordinates included) at both 1-cell and 2-reach stencils."""
+    coordinates included) at both 1-cell and 2-reach stencils.  Ids count
+    within each feature, so they repeat across features: an instance is
+    its (feature, id), and every pair comes out once."""
     spark = _get_spark()
-    rows = [
-        (f"F{f}", f"p{i:03d}", float(x), float(y))
-        for i, (f, x, y) in enumerate(pts)
-    ]
+    per_feature: dict[int, int] = {}
+    rows = []
+    for f, x, y in pts:
+        per_feature[f] = per_feature.get(f, 0) + 1
+        rows.append((f"F{f}", f"p{per_feature[f]:03d}", float(x), float(y)))
     df = spark.createDataFrame(rows, "feature string, id string, x double, y double")
-    got = {
-        (r.a_id, r.b_id)
+    out = [
+        ((r.a_feature, r.a_id), (r.b_feature, r.b_id))
         for r in neighbor_pairs(df, d, cell_size=d * cell_frac).collect()
-    }
+    ]
+    got = {frozenset(p) for p in out}
+    assert len(got) == len(out)
     expect = set()
-    for (fa, ia, xa, ya), (fb, ib, xb, yb) in itertools.combinations(
-        [(r[0], r[1], r[2], r[3]) for r in rows], 2
-    ):
+    for (fa, ia, xa, ya), (fb, ib, xb, yb) in itertools.combinations(rows, 2):
         if fa != fb and math.sqrt((xa - xb) ** 2 + (ya - yb) ** 2) <= d:
-            expect.add((min(ia, ib), max(ia, ib)))
+            expect.add(frozenset(((fa, ia), (fb, ib))))
     assert got == expect
 
 

@@ -25,9 +25,10 @@ def _oracle_cell(v, lo, cell, ncells):
     return min(math.floor((v - lo) / cell), ncells - 1)
 
 
-def test_tile_assignment_matches_oracle(spark, sample_instances):
-    grid = compute_bounds(sample_instances, D)
-    got = with_cell(sample_instances, grid).collect()
+def test_tile_assignment_matches_oracle(spark, generated):
+    grid = compute_bounds(generated.df, D)
+    got = with_cell(generated.df, grid).collect()
+    assert len(got) == len(generated.rows)
     for r in got:
         assert r.cell_x == _oracle_cell(r.x, grid.min_x, D, grid.ncells_x), r
         assert r.cell_y == _oracle_cell(r.y, grid.min_y, D, grid.ncells_y), r
@@ -42,9 +43,9 @@ def test_top_edge_clamped(spark):
     assert cells["B1"] == (grid.ncells_x - 1, grid.ncells_y - 1)
 
 
-def test_raster_vector_roundtrip(spark, sample_instances):
-    grid = compute_bounds(sample_instances, D)
-    counts = tile_counts(sample_instances, grid)
+def test_raster_vector_roundtrip(spark, generated):
+    grid = compute_bounds(generated.df, D)
+    counts = tile_counts(generated.df, grid)
     vec = vector_tiles(counts, grid)
     ras = raster_tiles(counts, grid)
 
@@ -63,7 +64,7 @@ def test_raster_vector_roundtrip(spark, sample_instances):
     }
 
     # total instance mass is conserved in both forms
-    n = sample_instances.count()
+    n = len(generated.rows)
     assert vec.agg(F.sum("n")).collect()[0][0] == n
     assert ras.select(F.explode("counts").alias("c")).agg(F.sum("c")).collect()[0][0] == n
 
