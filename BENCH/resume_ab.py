@@ -73,10 +73,8 @@ def main() -> None:
         os.remove(os.path.join(ck, f"level_{last}", "manifest.json"))
 
     def old_edge_table(self, instances, counts, rank, encode_ids, resume):
-        # round-5 behavior: no durable edges, recompute + repartition
-        return self._prepartitioned(
-            self._encoded_edges(instances, counts, rank, encode_ids), counts
-        )
+        # round-5 behavior: no durable edges, recompute them
+        return self._encoded_edges(instances, counts, rank, encode_ids)
 
     def run(arm: str) -> float:
         m = eng.ColocationMiner(spark, cfg)

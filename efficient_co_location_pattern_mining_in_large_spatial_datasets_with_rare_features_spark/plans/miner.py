@@ -1,18 +1,31 @@
 """Joinless co-location miner (WPI measure, rare features).
 
 The cluster does the heavy lifting (neighbor pairs, star edges, clique
-table-instance joins, distinct participation counts); the driver holds only
-the tiny candidate/prevalent bookkeeping — candidate sets are bounded by the
-number of *feature* subsets, not instances, so they are at most a few
-thousand tuples even at 10^12 instances.
+enumeration, distinct participation counts); the driver holds only the tiny
+candidate/prevalent bookkeeping — candidate sets are bounded by the number
+of *feature* subsets, not instances, so they are at most a few thousand
+tuples even at 10^12 instances.
 
-Per-level dataflow (paper Algorithms 1-3; reference src/miner.cpp:24-98):
+Dataflow (paper Algorithms 1-3; reference src/miner.cpp:24-98):
 
-    C_k  = apriori join of prevalent (k-1) patterns      [driver, J7]
-    C_k' = Lemma-2 + Lemma-3 pruning (skipped at k=2)    [driver, J8]
-    T_k  = T_{k-1} x star_edges clique-extension join    [cluster, J5/J6]
-    PR   = per (pattern, position) countDistinct         [cluster, A6]
-    P_k  = { C : min_f PR(f,C) * w(f,C) >= min_prev }    [driver, A9]
+    edges = rank-oriented neighbor pairs (= T_2)             [cluster, J1-J3]
+    PR_2  = per (pair, position) distinct count              [cluster, A6]
+    T_3   = edges(c->u) |x| edges(u->v), closed by c->v      [cluster, J4]
+    T_k   = every clique of size 3..last_k inside Star(c),   [cluster, J5/J6]
+            one grouped task per bucket of centers c
+    PR_k  = per (pattern, position) distinct count, all k    [cluster, A6]
+    then, per level k >= 3, on the driver only:
+    C_k   = apriori join of prevalent (k-1) patterns         [driver, J7]
+    C_k'  = Lemma-2 + Lemma-3 pruning (skipped at k=2)       [driver, J8]
+    P_k   = { C : min_f PR(f,C) * w(f,C) >= min_prev }       [driver, A9]
+
+Star edges point from lower to higher feature rank, so every row instance
+{o_1..o_k} lies inside the star of its rarest member o_1 (the paper's
+ordered NR-tree, Def. 8): one pass grouped by center enumerates every level
+at once (``_table_k``), and the level loop only looks participation up in
+its one collected table.  The pass keeps a clique only if each pair
+(c[0], c[i]) is a prevalent size-2 pattern, which Lemma 2 implies for every
+candidate, so it loses none.
 
 Reference-semantics riders replicated exactly (FIXTURES.md §5):
 
@@ -27,22 +40,23 @@ per call (``_prologue``): the stats aggregate, the string-id fallback, the
 persisted edge table and one global level 2 over every rank-ordered pair.
 The level loop (``_mine_scope``) then mines k >= 3 for a scope: ``mine``
 runs one scope over all features (paper Algorithm 2), ``mine_subtrees``
-one scope per rarest feature from a thread pool (Algorithm 3).
+one scope per rarest feature from a thread pool (Algorithm 3).  Every scope
+shares the one clique pass.
 
 Spark actions: one stats aggregate before level 2 (feature histogram,
 coordinate check, the pair join's hot cells and the id-hash check, see
-``_stats``), then one participation collect per level.  Levels k >= 3 are
-checkpointed lazily, so that collect also stores the level table the next
-level joins against; no action runs on a background thread.
+``_stats``), one level-2 participation collect, and one collect of the
+clique pass for every level k >= 3, run only if some scope reaches k = 3.
+No action runs on a background thread.
 
-Checkpoint/resume: with ``config.checkpoint_dir`` set, each level's table
-instance is written to parquet together with a JSON manifest carrying the
-level's candidates, prevalent set, PI map, per-partition row counts and
-lineage ids.  Level 2 is shared by both plans (``level_2/``); levels
-k >= 3 go to ``level_<k>/`` (``mine``) or ``subtree_<rank>/level_<k>/``
-(``mine_subtrees``).  ``resume=True`` reloads level 2 and then, per scope,
-the last level of the unbroken chain above it, so a failure mid-level-k
-costs only that level, and either plan resumes the other's level 2.
+Checkpoint/resume: with ``config.checkpoint_dir`` set, the edges are
+written once as a bucketed parquet table and each level writes a JSON
+manifest carrying its row count, candidates, prevalent set, PI and WPI maps
+and lineage.  Level 2 is shared by both plans (``level_2/``); levels k >= 3
+go to ``level_<k>/`` (``mine``) or ``subtree_<rank>/level_<k>/``
+(``mine_subtrees``).  ``resume=True`` replays level 2 and then, per scope,
+the unbroken chain of manifests above it, and runs the clique pass only if
+a scope still has levels to mine; either plan resumes the other's level 2.
 """
 
 from __future__ import annotations
@@ -50,12 +64,15 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 import time
-from collections.abc import Iterator, Mapping, Sequence
+from collections.abc import Callable, Iterator, Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,6 +83,96 @@ from ..operators.pairs import neighbor_pairs
 from ..operators.stars import star_edges
 
 Pattern = tuple[str, ...]
+#: participation per pattern and position, and row count per pattern
+Participation = tuple[dict[Pattern, dict[int, int]], dict[Pattern, int]]
+
+#: center buckets of the clique pass per shuffle partition: more, smaller
+#: groups bound the memory one grouped-map call holds
+BUCKETS_PER_PARTITION = 4
+
+
+def star_cliques(n_features: int, last_k: int) -> Callable[[pd.DataFrame], pd.DataFrame]:
+    """The clique pass's grouped-map kernel: every clique of size
+    3..``last_k`` of one bucket of star centers, as distinct ``(pattern,
+    pos, id, n)``: instance ``id`` is member ``pos`` of ``n`` cliques of
+    ``pattern`` (comma-joined feature ranks).
+
+    Its input holds a row ``(c_f, c_id, member_f, member_id, v_f, v_id)``
+    for every path c -> u -> v of a center c in the bucket, and a row with
+    v = u for every star edge c -> u that no path continues; so the first
+    hops are the stars, and a path closes a triangle when c -> v is one.  A
+    clique lies inside the star of its first (rarest) member, so a
+    (j+1)-clique is a j-clique extended by a v of a triangle (c[0], c[-1],
+    v) that neighbors every other member — an edge (c[i], v), which the
+    triangle (c[0], c[i], v) carries.  Instances are keyed by (feature
+    rank, id) and coded densely inside the task.
+
+    The kernel is a closure, so Spark ships it by value and the Python
+    workers need not import this package."""
+
+    def contains(keys: np.ndarray, queries: np.ndarray) -> np.ndarray:
+        return pd.Series(queries).isin(keys).to_numpy()
+
+    def kernel(paths: pd.DataFrame) -> pd.DataFrame:
+        m = len(paths)
+        # dense instance codes: hash factorization, no sort
+        id_code, ids = pd.factorize(np.concatenate([paths["c_id"], paths["member_id"], paths["v_id"]]))
+        feature = np.concatenate([paths["c_f"], paths["member_f"], paths["v_f"]]).astype(np.int64)
+        code, inst = pd.factorize(id_code * n_features + feature)
+        n = len(inst)
+        c, u, v = code.reshape(3, m)
+        closed = (u != v) & contains(c * n + u, c * n + v)
+        c, u, v = c[closed], u[closed], v[closed]
+        # triangles sorted by (c, u, v), each once: cu = c*n + u keys the
+        # triangles of center c through member u, u*n + v an edge of members
+        cu = c * n + u
+        order = np.lexsort((v, cu))
+        cu, v = cu[order], v[order]
+        first = np.ones(len(cu), dtype=bool)
+        first[1:] = (cu[1:] != cu[:-1]) | (v[1:] != v[:-1])
+        cu, v = cu[first], v[first]
+        member_edges = cu % n * n + v
+        inst_feature, inst_id = inst % n_features, ids[inst // n_features]
+        # the triangles through each pair (c, u) are v[start : start + width]
+        heads, start, width = np.unique(cu, return_index=True, return_counts=True)
+        heads = pd.Index(heads)
+
+        # start from the pairs (c, u) that lead a triangle; pid indexes
+        # ``patterns``, the feature-rank tuples of the current size
+        cliques = np.stack([heads // n, heads % n], axis=1)
+        pid, codes = pd.factorize(inst_feature[cliques] @ [n_features, 1])
+        patterns = [(x // n_features, x % n_features) for x in codes]
+        out = []
+        while cliques.shape[1] < last_k:
+            # extend each clique by the v of every triangle (first, last, v)
+            # that neighbors the members in between
+            at = heads.get_indexer(cliques[:, 0] * n + cliques[:, -1])
+            lo, w = start[at], np.where(at >= 0, width[at], 0)
+            rows = np.repeat(np.arange(len(cliques)), w)
+            # the t-th extension of clique i is triangle lo[i] + t
+            nbr = v[np.repeat(lo - np.cumsum(w) + w, w) + np.arange(len(rows))]
+            keep = np.ones(len(rows), dtype=bool)
+            for pos in range(1, cliques.shape[1] - 1):
+                keep &= contains(member_edges, cliques[rows, pos] * n + nbr)
+            rows, nbr = rows[keep], nbr[keep]
+            if not len(rows):
+                break
+            cliques = np.concatenate([cliques[rows], nbr[:, None]], axis=1)
+            pid, codes = pd.factorize(pid[rows] * n_features + inst_feature[nbr])
+            patterns = [patterns[x // n_features] + (x % n_features,) for x in codes]
+            names = np.array([",".join(map(str, p)) for p in patterns], dtype=object)
+            for pos in range(cliques.shape[1]):
+                count = pd.Series(pid * n + cliques[:, pos]).value_counts(sort=False)
+                key = count.index.to_numpy()
+                out.append(pd.DataFrame({
+                    "pattern": names[key // n], "pos": pos, "id": inst_id[key % n],
+                    "n": count.to_numpy(),
+                }))
+        if not out:
+            return pd.DataFrame({"pattern": [], "pos": [], "id": [], "n": []})
+        return pd.concat(out)
+
+    return kernel
 
 
 def generate_candidates(prevalent: Sequence[Pattern], rank: Mapping[str, int]) -> list[Pattern]:
@@ -191,10 +298,8 @@ class _Level:
     """The last mined level of a scope: what the next level extends."""
 
     k: int
-    table: DataFrame
-    #: the level's filtered candidates; a table row's ``pid`` indexes this
-    filtered: list[Pattern]
     prevalent: list[Pattern]
+    #: PI of every filtered candidate of the level (Lemma 3 reads it)
     pi: dict[Pattern, float]
 
 
@@ -229,7 +334,6 @@ class ColocationMiner:
     def _write_level(
         self,
         k: int,
-        table: DataFrame,
         table_rows: int,
         filtered: list[Pattern],
         prevalent: list[Pattern],
@@ -240,13 +344,9 @@ class ColocationMiner:
         if not self.config.checkpoint_dir:
             return
         parts = ([subdir] if subdir else []) + [f"level_{k}"]
-        path = self._ckpt_path(*parts)
-        table_dir = os.path.join(path, "table")
-        table.write.mode("overwrite").parquet(table_dir)
         manifest = {
             "level": k,
             "row_count": table_rows,
-            "partition_row_counts": self._partition_counts(table_dir),
             "filtered_candidates": [list(p) for p in filtered],
             "prevalent": [list(p) for p in prevalent],
             "pi": {",".join(p): v for p, v in pi_map.items()},
@@ -257,42 +357,7 @@ class ColocationMiner:
                 "written_at": time.time(),
             },
         }
-        self._dump_json(os.path.join(path, "manifest.json"), manifest)
-
-    def _partition_counts(self, table_dir: str) -> list[list[int]]:
-        """Per-partition row counts for the manifest: the parquet footers of
-        the files just written (each task writes one part file), or, when
-        the dir is not locally listable (an hdfs:// or s3a:// URI), a Spark
-        re-read counted per file, which works on any filesystem."""
-        import urllib.parse
-
-        parsed = urllib.parse.urlparse(table_dir)
-        if parsed.scheme in ("", "file"):
-            try:
-                import pyarrow.parquet as pq
-
-                local = parsed.path if parsed.scheme == "file" else table_dir
-                part_files = sorted(
-                    f for f in os.listdir(local) if f.endswith(".parquet")
-                )
-                return [
-                    [i, pq.ParquetFile(os.path.join(local, f)).metadata.num_rows]
-                    for i, f in enumerate(part_files)
-                ]
-            except Exception:  # noqa: BLE001 — missing pyarrow, unreadable
-                pass  # dir or corrupt footer: fall through to the re-read
-        # per FILE, not spark_partition_id (a fresh read packs splits); empty
-        # part files give no group, so only the sum is contractual
-        rows = (
-            self.spark.read.parquet(table_dir)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        return [
-            [i, int(r["n"])]
-            for i, r in enumerate(sorted(rows, key=lambda r: r["f"]))
-        ]
+        self._dump_json(self._ckpt_path(*parts, "manifest.json"), manifest)
 
     def _load_manifests(self, subdir: str | None = None, first: int = 2) -> list[dict]:
         """The unbroken chain of level manifests from level ``first`` in the
@@ -346,14 +411,11 @@ class ColocationMiner:
           ``build_pairs`` so the pair operator launches no job of its own;
         - the per-feature id-hash injectivity check.
 
-        Instance ids are xxhash64-encoded to int64 for every mining table
-        (level tables shuffle arrays of longs instead of strings, ~4x
-        smaller rows); encoding is safe iff hashing is injective per feature
-        (participation counts are per-feature, so cross-feature collisions
-        are harmless).  Any (feature, hash) group holding more than one
-        instance fails the check — duplicated input ids fail it too — and
-        ``join_check()`` returns False, so the caller mines with exact
-        string ids instead."""
+        Instance ids are xxhash64-encoded to int64 for every mining table;
+        every join also keys by feature, so encoding is safe iff hashing is
+        injective per feature.  Any (feature, hash) group holding more than
+        one instance (duplicated input ids too) makes ``join_check()``
+        return False, so the caller mines with exact string ids instead."""
         cfg = self.config
         grid = origin_grid(cfg.effective_cell_size())
         salt = cfg.salt_threshold
@@ -395,7 +457,8 @@ class ColocationMiner:
         self._pair_plan = (grid, hot)
         injective = not of.get("hash")
         counts = {r["feature"]: r["n"] for r in of["feature"]}
-        rank = {f: i for i, f in enumerate(measures.rank_features(counts))}
+        self._features = measures.rank_features(counts)
+        rank = {f: i for i, f in enumerate(self._features)}
         self._rank = rank
         return counts, rank, measures.delta(counts), lambda: injective
 
@@ -413,7 +476,7 @@ class ColocationMiner:
             (F.xxhash64("nbr_id") if encode_ids else F.col("nbr_id")).alias("nbr_id"),
         )
 
-    #: clique-join key every level-k>=3 join (and every subtree level) hits
+    #: bucket columns of the checkpointed edge table
     EDGE_BUCKET_COLS = ("center_id", "nbr_feature")
 
     def _edges_ddl(self, encode_ids: bool) -> str:
@@ -428,25 +491,20 @@ class ColocationMiner:
         encode_ids: bool,
         resume: bool,
     ) -> DataFrame:
-        """The edge table each level joins against — durable and bucketed
-        when checkpointing.
+        """The edge table level 2 and the clique pass read — durable and
+        bucketed when checkpointing.
 
-        Without a checkpoint dir: the in-session plan (``_prepartitioned``;
-        the prologue caches it).  With one: the edges
-        are written ONCE as a parquet table bucketed+sorted on
-        (center_id, nbr_feature) under ``<checkpoint_dir>/edges``, so the
-        write shuffle is the LAST time they move — every level-k join
-        satisfies its required distribution straight off the scan, and a
-        RESUME (same or new session) re-attaches the layout via
+        Without a checkpoint dir: the in-session plan (the prologue caches
+        it).  With one: the edges are written ONCE as a parquet table
+        bucketed+sorted on (center_id, nbr_feature) under
+        ``<checkpoint_dir>/edges``, and a RESUME (same or new session) re-attaches the layout via
         ``ensure_bucketed_table`` and skips the entire pairs -> stars ->
         edges recompute (the dominant fixed cost of re-mining; see
         BENCH/resume_ab.py).  The edge manifest pins neighbor_distance and
         the id encoding — the same trust model as level manifests."""
         cfg = self.config
         if not cfg.checkpoint_dir:
-            return self._prepartitioned(
-                self._encoded_edges(instances, counts, rank, encode_ids), counts
-            )
+            return self._encoded_edges(instances, counts, rank, encode_ids)
         import hashlib
 
         from ..sources.bucketed import ensure_bucketed_table, write_bucketed
@@ -483,20 +541,6 @@ class ColocationMiner:
         })
         return out
 
-    def _prepartitioned(self, edges: DataFrame, counts: Mapping[str, int]) -> DataFrame:
-        """Pre-partition the edge table on the clique-join key: every
-        level-k>=3 join (and, in the subtree plan, every subtree's every
-        level) hits edges on (center_id, nbr_feature), so a cached
-        hash-partitioned table satisfies each join's required distribution
-        and the per-level edge re-shuffles collapse into one upfront
-        shuffle (measured −28% on the 2M-instance level-3 wall).  Below
-        ~200k instances the edge subsets broadcast anyway (≤10 MB) and the
-        upfront shuffle is pure overhead — skip it there."""
-        if sum(counts.values()) < 200_000:
-            return edges
-        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        return edges.repartition(nparts, "center_id", "nbr_feature")
-
     def build_pairs(self, instances: DataFrame) -> DataFrame:
         """Neighbor pairs on the grid and hot cells ``_stats`` counted."""
         cfg = self.config
@@ -511,124 +555,93 @@ class ColocationMiner:
             hot_cells=hot,
         )
 
-    def _table_k(
-        self,
-        t_prev: DataFrame,
-        edges: DataFrame,
-        candidates: list[Pattern],
-        filtered_prev: list[Pattern],
-        k: int,
-    ) -> DataFrame:
-        """Clique-extension join: T_k rows = T_{k-1} rows of each candidate's
-        prefix, extended by instances neighboring *every* member (the paper's
+    def _last_k(self, counts: Mapping[str, int]) -> int:
+        """The largest pattern size a scope mines."""
+        cap = self.config.max_pattern_size
+        return len(counts) if cap is None else min(len(counts), cap)
+
+    def _table_k(self, edges: DataFrame, pairs: Sequence[Pattern], last_k: int) -> DataFrame:
+        """The clique pass, lazily: participation ``(pattern, pos, n,
+        rows)`` of every clique of size 3..``last_k`` whose pairs (c[0],
+        c[i]) are all in the prevalent ``pairs``.
+
+        The paths c -> u -> v come from one left join of star edges on
+        their member u, keyed by (feature rank, id) like every instance of
+        the pass, and are grouped by a bucket of the center c:
+        ``star_cliques`` keeps the paths that close a triangle and
+        enumerates the larger cliques inside one task per bucket, and one
+        aggregate counts distinct participating instances (the paper's
         S(I, f) = intersection of Neigh(o, f), Def. 8 eq. 10; reference
-        src/miner.cpp:264-379).  Relationally: explode row members, hash-join
-        member -> star edge on instance id, keep extensions seen k-1 times.
+        src/miner.cpp:264-379).  The task reads each star off the paths'
+        first hops, so closing the triangles there costs no semi-join with
+        c -> v and no second shuffle of the paths."""
+        nf = len(self._rank)
+        ranked = {(self._rank[f], self._rank[g]) for f, g in pairs}
+        # a member edge u -> v can close a triangle only if some center
+        # feature forms a prevalent pair with both u's and v's feature
+        closing = {(g, h) for f, g in ranked for f2, h in ranked if f == f2 and g < h}
 
-        Tables carry a compact integer ``pid`` (the candidate's index in the
-        level's filtered list) instead of an ``array<string>`` pattern key —
-        the pattern universe is driver-side, so shuffles never move feature
-        strings.
-        """
-        spark = self.spark
-        prev_index = {c: i for i, c in enumerate(filtered_prev)}
-        cand_df = spark.createDataFrame(
-            [
-                (prev_index[c[:-1]], self._rank[c[-1]], pid)
-                for pid, c in enumerate(candidates)
-            ],
-            "prefix_pid int, f_new int, pid int",
-        )
-        new_features = sorted({self._rank[c[-1]] for c in candidates})
-        edges_k = edges.filter(F.col("nbr_feature").isin(new_features))
+        def star(pairs: set[tuple[int, int]], *names: str) -> DataFrame:
+            # SQL text: one py4j call per operator, not one per literal
+            keys = ", ".join(str(f * nf + g) for f, g in sorted(pairs))
+            return edges.filter(f"center_feature * {nf} + nbr_feature IN ({keys})").toDF(*names)
 
-        base = t_prev.join(
-            F.broadcast(cand_df), t_prev.pid == cand_df.prefix_pid, "inner"
-        ).select(
-            cand_df.pid.alias("pid"),
-            F.col("inst"),
-            F.col("f_new"),
-            F.explode(F.col("inst")).alias("member_id"),
+        # A left join keeps the star edges no path continues, as v = u.  It
+        # hashes the member edges instead of sorting both sides: on the sf0.1
+        # flagship (4 cores) its stage fell from 2.0 to 0.55 s in the first
+        # mine and from 0.7 to 0.3 s once warm.
+        members = star(closing, "member_f", "member_id", "v_f", "v_id").hint("shuffle_hash")
+        paths = star(ranked, "c_f", "c_id", "member_f", "member_id").join(
+            members, ["member_f", "member_id"], "left"
+        ).selectExpr(
+            "c_f", "c_id", "member_f", "member_id",
+            "coalesce(v_f, member_f) AS v_f", "coalesce(v_id, member_id) AS v_id",
+            "pmod(hash(c_f, c_id), {}) AS bucket".format(
+                BUCKETS_PER_PARTITION * int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            ),
         )
-        joined = base.join(
-            edges_k,
-            (base.member_id == edges_k.center_id)
-            & (base.f_new == edges_k.nbr_feature),
-            "inner",
+        id_type = "bigint" if self._encode_ids else "string"
+        cliques = paths.groupBy("bucket").applyInPandas(
+            star_cliques(nf, last_k),
+            f"pattern string, pos int, id {id_type}, n bigint",
         )
-        return (
-            joined.groupBy("pid", "inst", "nbr_id")
-            .count()
-            .filter(F.col("count") == k - 1)
-            .select(
-                F.col("pid"),
-                F.concat(F.col("inst"), F.array(F.col("nbr_id"))).alias("inst"),
-            )
+        return cliques.groupBy("pattern", "pos").agg(
+            self._ndistinct("id").alias("n"), F.sum("n").alias("rows")
         )
 
     def _ndistinct(self, col: str) -> F.Column:
         """Participation distinct-count aggregate: reference-exact
-        ``countDistinct`` by default, HyperLogLog++ sketch when the config
-        opts into ``approx_rsd`` (constant state per group instead of a
-        distinct shuffle — the scale lever for the heaviest agg in the
-        plan).  The id-hash injectivity check never uses this: a collision
-        probe must be exact by definition."""
+        ``countDistinct``, or a HyperLogLog++ sketch when the config opts
+        into ``approx_rsd`` (constant state per group instead of a distinct
+        shuffle)."""
         if self.config.approx_rsd is not None:
             return F.approx_count_distinct(col, self.config.approx_rsd)
         return F.countDistinct(col)
 
-    def _participation(
-        self, t_k: DataFrame, pid_of: Mapping[tuple[int, int], int] | None = None
-    ) -> tuple[dict[int, dict[int, int]], dict[int, int]]:
-        """A6 in one pass: distinct participating instances per (pid,
-        position) plus the per-pattern row count (same aggregation, no
-        separate count job).
-
-        At level 2 ``t_k`` is the edge table and ``pid_of`` maps (center,
-        neighbor) feature ranks to pids: the star edge IS the size-2 row
-        instance, so the counts come straight off the edges, with no
-        posexplode pass over T_2 (0.80 s against 1.28 s, median of 12, on
-        the sf0.1 flagship's 450,387 cached edges, local[4])."""
-        part: dict[int, dict[int, int]] = {}
-        counts: dict[int, int] = {}
-        if pid_of is not None:
-            for r in (
-                t_k.groupBy("center_feature", "nbr_feature")
-                .agg(
-                    self._ndistinct("center_id").alias("n0"),
-                    self._ndistinct("nbr_id").alias("n1"),
-                    F.count("*").alias("rows"),
-                )
-                .collect()
-            ):
-                pid = pid_of[(r["center_feature"], r["nbr_feature"])]
-                part[pid] = {0: r["n0"], 1: r["n1"]}
-                counts[pid] = r["rows"]
-            return part, counts
-        rows = (
-            t_k.select(F.col("pid"), F.posexplode(F.col("inst")))
-            .groupBy("pid", "pos")
-            .agg(self._ndistinct("col").alias("n"), F.count("*").alias("rows"))
-            .collect()
-        )
-        for r in rows:
-            part.setdefault(r["pid"], {})[r["pos"]] = r["n"]
-            if r["pos"] == 0:
-                counts[r["pid"]] = r["rows"]
-        return part, counts
+    def _participation(self, table: DataFrame) -> Participation:
+        """Collect a participation table ``(pattern, pos, n, rows)``, the
+        pattern given as comma-joined feature ranks: distinct participating
+        instances per (pattern, position) and the pattern's row count."""
+        part: dict[Pattern, dict[int, int]] = {}
+        rows: dict[Pattern, int] = {}
+        for r in table.collect():
+            p = tuple(self._features[int(x)] for x in r["pattern"].split(","))
+            part.setdefault(p, {})[r["pos"]] = r["n"]
+            rows[p] = r["rows"]
+        return part, rows
 
     def _select_prevalent(
         self,
         candidates: list[Pattern],
-        part: dict[int, dict[int, int]],
+        part: dict[Pattern, dict[int, int]],
         counts: dict[str, int],
         delta_value: float,
     ) -> tuple[list[Pattern], dict[Pattern, float], dict[Pattern, float]]:
         prevalent: list[Pattern] = []
         pi_map: dict[Pattern, float] = {}
         wpi_map: dict[Pattern, float] = {}
-        for pid, c in enumerate(candidates):
-            by_pos = part.get(pid, {})
+        for c in candidates:
+            by_pos = part.get(c, {})
             participating = {f: by_pos.get(i, 0) for i, f in enumerate(c)}
             pi_map[c] = measures.pi(c, participating, counts)
             w = measures.wpi(c, participating, counts, delta_value)
@@ -639,67 +652,63 @@ class ColocationMiner:
 
     # -------------------------------------------------------------- driver
     def _finish_level(
-        self, res: MiningResult, k: int, t_k: DataFrame, n_candidates: int,
-        filtered: list[Pattern], participation: tuple, t0: float, root: str | None = None,
+        self, res: MiningResult, k: int, n_candidates: int, filtered: list[Pattern],
+        participation: Participation, t0: float, root: str | None = None,
     ) -> _Level:
         """Select level k's prevalent patterns from ``_participation``'s
         output, checkpoint the level and record it in ``res``."""
-        part, rows_by_pid = participation
-        table_rows = sum(rows_by_pid.values())
+        part, rows = participation
+        table_rows = sum(rows.get(c, 0) for c in filtered)
         prevalent, pi_map, wpi_map = self._select_prevalent(
             filtered, part, res.counts, res.delta
         )
         subdir = None if root is None else f"subtree_{self._rank[root]}"
-        self._write_level(
-            k, t_k, table_rows, filtered, prevalent, pi_map, wpi_map, subdir=subdir
-        )
+        self._write_level(k, table_rows, filtered, prevalent, pi_map, wpi_map, subdir=subdir)
         res.patterns.extend(prevalent)
         res.wpi.update((c, wpi_map[c]) for c in prevalent)
         res.levels.append(
             LevelStats(k, n_candidates, len(filtered), len(prevalent), table_rows,
                        time.time() - t0, root)
         )
-        return _Level(k, t_k, filtered, prevalent, pi_map)
+        return _Level(k, prevalent, pi_map)
 
-    def _replay(self, chain: list[dict], res: MiningResult, subdir: str | None = None) -> _Level:
+    def _replay(self, chain: list[dict], res: MiningResult) -> _Level:
         """Add a checkpointed chain's patterns to ``res`` and return its last
-        level, whose table is read back from parquet."""
+        level."""
         last = chain[-1]
         self._validate_manifest_config(last)
         for m in chain:
             prevalent = [tuple(p) for p in m["prevalent"]]
             res.patterns.extend(prevalent)
             res.wpi.update((p, m["wpi"][",".join(p)]) for p in prevalent)
-        k = last["level"]
-        parts = ([subdir] if subdir else []) + [f"level_{k}", "table"]
         return _Level(
-            k,
-            self.spark.read.parquet(self._ckpt_path(*parts)),
-            [tuple(p) for p in last["filtered_candidates"]],
-            prevalent,
-            {tuple(p.split(",")): v for p, v in last["pi"].items()},
+            last["level"], prevalent, {tuple(p.split(",")): v for p, v in last["pi"].items()}
         )
 
     @contextmanager
     def _prologue(
         self, instances: DataFrame, resume: bool, encode_ids: bool
-    ) -> Iterator[tuple[MiningResult, DataFrame, _Level, bool]]:
+    ) -> Iterator[tuple[MiningResult, Callable[[], Participation], _Level, bool]]:
         """What both plans run once per call: stats, the string-id fallback,
         the persisted edge table and the global level 2 (mined, or replayed
         from ``level_2/``).
 
-        Yields the result so far (level 2), the edges, level 2 and whether
-        it was resumed, in which case the scopes may resume levels k >= 3;
-        the edges are unpersisted on exit."""
+        Yields the result so far (level 2), the clique pass, level 2 and
+        whether it was resumed, in which case the scopes may resume levels
+        k >= 3.  The pass is a callable that runs ``_table_k`` on first use
+        and returns its participation to every later caller, from any
+        thread; the edges are unpersisted on exit."""
         level2 = self._load_manifests()[:1] if resume else []
         if level2:
-            # a checkpoint fixes the id representation of its level tables:
-            # the edges must be built with the SAME encoding, or the level
-            # join would silently compare strings to longs
+            # keep the checkpoint's id representation, so its bucketed edges
+            # are reused and a string-id run is not detected and restarted
             encode_ids = level2[0]["lineage"].get("encode_ids", True)
         counts, rank, delta_value, join_check = self._stats(
             instances, check_hashes=encode_ids
         )
+        if not counts:  # empty input: no pairs, no patterns
+            yield MiningResult([], {}, counts, delta_value, 0), None, _Level(2, [], {}), False
+            return
         # Duplicate or colliding ids: mine with exact string ids instead (the
         # stats above do not depend on ids).  Every checkpoint of an earlier
         # encoded run is invalidated so no later resume can mix encodings.
@@ -718,33 +727,43 @@ class ColocationMiner:
             else:
                 t0 = time.time()
                 # C_2 = all rank-ordered feature pairs; no Lemma filtering
-                # (reference src/miner.cpp:64-71).  The pids are global, so
-                # every scope's first join reads this one T_2 projection.
+                # (reference src/miner.cpp:64-71).  The star edge IS the
+                # size-2 row instance, so the counts come straight off the
+                # edges.
                 ranked = measures.rank_features(counts)
                 filtered = [(f, g) for i, f in enumerate(ranked) for g in ranked[i + 1 :]]
-                pid_of = {(rank[f], rank[g]): pid for pid, (f, g) in enumerate(filtered)}
-                pid_map = self.spark.createDataFrame(
-                    [(*fg, pid) for fg, pid in pid_of.items()],
-                    "center_feature int, nbr_feature int, pid int",
+                pairs = edges.groupBy("center_feature", "nbr_feature").agg(
+                    self._ndistinct("center_id").alias("n0"),
+                    self._ndistinct("nbr_id").alias("n1"),
+                    F.count("*").alias("rows"),
                 )
-                # T_2 is a pure projection of the persisted edges: never
-                # materialized, or it would double-store the biggest table
-                t_2 = edges.join(
-                    F.broadcast(pid_map), ["center_feature", "nbr_feature"]
-                ).select("pid", F.array("center_id", "nbr_id").alias("inst"))
-                participation = self._participation(edges, pid_of)
+                participation = self._participation(pairs.selectExpr(
+                    "concat_ws(',', center_feature, nbr_feature) AS pattern",
+                    "rows",
+                    "inline(array(struct(0 AS pos, n0 AS n), struct(1 AS pos, n1 AS n)))",
+                ))
                 res.pair_count = sum(participation[1].values())
-                top = self._finish_level(res, 2, t_2, len(filtered), filtered, participation, t0)
-            yield res, edges, top, bool(level2)
+                top = self._finish_level(res, 2, len(filtered), filtered, participation, t0)
+            lock, memo = threading.Lock(), []
+
+            def cliques() -> Participation:
+                with lock:
+                    if not memo:
+                        table = self._table_k(edges, top.prevalent, self._last_k(counts))
+                        memo.append(self._participation(table))
+                return memo[0]
+
+            yield res, cliques, top, bool(level2)
         finally:
             edges.unpersist()
 
     def _mine_scope(
-        self, res: MiningResult, edges: DataFrame, top: _Level,
+        self, res: MiningResult, cliques: Callable[[], Participation], top: _Level,
         root: str | None = None, resume: bool = False,
     ) -> None:
         """The level loop: mine levels k >= 3 of one scope into ``res``,
-        starting from level 2 ``top``.
+        starting from level 2 ``top``, with participation from the clique
+        pass ``cliques``.
 
         The scope is every feature (``root`` None, with Lemma 3) or the
         subtree of the patterns whose rarest feature is ``root``: it starts
@@ -758,48 +777,27 @@ class ColocationMiner:
             top = replace(top, prevalent=[p for p in top.prevalent if p[0] == root])
         chain = self._load_manifests(subdir, first=3) if resume else []
         if chain:
-            top = self._replay(chain, res, subdir)
-        last_k = len(res.counts)
-        if cfg.max_pattern_size is not None:
-            last_k = min(last_k, cfg.max_pattern_size)
-        try:
-            while top.prevalent and top.k < last_k:
-                t0 = time.time()
-                k = top.k + 1
-                candidates = generate_candidates(top.prevalent, self._rank)
-                filtered = filter_candidates(
-                    candidates, set(top.prevalent), top.pi, res.counts, res.delta,
-                    cfg.min_prevalence, use_lemma3=root is None,
-                )
-                if not filtered:
-                    break
-                t_k = self._table_k(top.table, edges, filtered, top.filtered, k)
-                # Truncate lineage: each level joins against the previous one
-                # and the plan tree would otherwise grow exponentially (SURVEY
-                # §7).  The checkpoint is lazy: the participation collect is
-                # the one action of the level, and it stores the level's rows
-                # for the next join (and the parquet write) as it runs.  The
-                # final level is exempt: no level k+1 will read it, so
-                # participation aggregates straight off the fused join.
-                if k < last_k or cfg.checkpoint_dir:
-                    t_k = t_k.localCheckpoint(eager=False)
-                level = self._finish_level(
-                    res, k, t_k, len(candidates), filtered, self._participation(t_k), t0, root
-                )
-                if top.k > 2:
-                    top.table.unpersist()
-                top = level
-        finally:
-            if top.k > 2:
-                top.table.unpersist()
+            top = self._replay(chain, res)
+        while top.prevalent and top.k < self._last_k(res.counts):
+            t0 = time.time()
+            candidates = generate_candidates(top.prevalent, self._rank)
+            filtered = filter_candidates(
+                candidates, set(top.prevalent), top.pi, res.counts, res.delta,
+                cfg.min_prevalence, use_lemma3=root is None,
+            )
+            if not filtered:
+                break
+            top = self._finish_level(
+                res, top.k + 1, len(candidates), filtered, cliques(), t0, root
+            )
 
     # ---------------------------------------------------------------- mine
     def mine(
         self, instances: DataFrame, resume: bool = False, _encode: bool = True
     ) -> MiningResult:
         """Level-wise plan (paper Algorithm 2): one scope over all features."""
-        with self._prologue(instances, resume, _encode) as (res, edges, level2, resumed):
-            self._mine_scope(res, edges, level2, resume=resumed)
+        with self._prologue(instances, resume, _encode) as (res, cliques, level2, resumed):
+            self._mine_scope(res, cliques, level2, resume=resumed)
         return res
 
     def mine_subtrees(
@@ -821,11 +819,10 @@ class ColocationMiner:
         intrinsic (WPI >= min_prev over the same cliques) and Lemma 2 makes
         the per-subtree stopping rule equivalent to the global one.
 
-        Physically: the prologue (edges and the global level 2) is shared
-        with ``mine()``; then one level loop per root feature mines k >= 3
-        CONCURRENTLY from a thread pool — per-level driver barriers of
-        different subtrees overlap, so executors stay busy where the
-        level-wise plan would idle at each collect.  Patterns and level
+        Physically: the prologue is shared with ``mine()``; then one
+        level loop per root feature mines k >= 3 from a thread pool, all
+        reading the one clique pass, which the first scope to reach k = 3
+        runs (it prunes with the global level-2 pairs).  Patterns and level
         stats are merged in root order.
 
         Checkpoint/resume: level 2 is the shared ``level_2/``, and each
@@ -836,11 +833,11 @@ class ColocationMiner:
         Per-subtree ``level_2`` checkpoints of older layouts are not
         resumed: such a run starts from scratch.
         """
-        with self._prologue(instances, resume, _encode) as (res, edges, level2, resumed):
+        with self._prologue(instances, resume, _encode) as (res, cliques, level2, resumed):
 
             def scope(root: str) -> MiningResult:
                 out = MiningResult([], {}, res.counts, res.delta, res.pair_count)
-                self._mine_scope(out, edges, level2, root, resumed)
+                self._mine_scope(out, cliques, level2, root, resumed)
                 return out
 
             with ThreadPoolExecutor(max_workers=max_workers) as ex:
@@ -851,12 +848,9 @@ class ColocationMiner:
         return res
 
     # ------------------------------------------------------- plan selector
-    # Measured crossover (BENCH/BASELINE.md "Plan choice at this scale"):
-    # the subtree plan's concurrent per-level barriers win only once driver
-    # barriers dominate — at the 2M-instance workload it is the faster and
-    # better-scaling plan, while on both reference datasets (23k-50k
-    # instances) it measured SLOWER than level-wise (9.55 vs 4.6-14.8 s
-    # legs).  ~1M instances is where the regimes flip on this hardware.
+    # Crossover measured on the per-level plan, whose subtree threads
+    # overlapped one driver barrier per level (BENCH/BASELINE.md "Plan
+    # choice at this scale"); the clique pass left no such barrier.
     AUTO_SUBTREE_THRESHOLD = 1_000_000
 
     def mine_auto(

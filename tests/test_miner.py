@@ -21,7 +21,7 @@ from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_fe
 )
 
 #: Spark jobs of one mine of the generated fixture (4 levels, in memory)
-MINE_JOB_BOUND = 20
+MINE_JOB_BOUND = 13
 
 GOLD_SAMPLE = {
     frozenset(p)
@@ -105,8 +105,9 @@ def test_star_table_grouping(spark, generated):
 def test_mine_launches_every_job_on_the_caller_thread(spark, generated):
     """Every Spark job of a mine reaching k=4 runs under the caller's job
     group, so none comes from a background thread, and the mine stays at
-    its pinned job count: one action per level, none before the pair
-    join.  A new collect in the miner shows up here."""
+    its pinned job count: the stats aggregate, the level-2 aggregate and
+    one clique pass for every level k >= 3.  A new collect in the miner
+    shows up here."""
     tracker = spark.sparkContext.statusTracker()
     cfg = eng.ColocationConfig(generated.d, generated.min_prev)
     ungrouped = set(tracker.getJobIdsForGroup(None))
@@ -117,6 +118,59 @@ def test_mine_launches_every_job_on_the_caller_thread(spark, generated):
     assert max(len(p) for p in res.patterns) == 4
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     assert jobs <= MINE_JOB_BOUND
+
+
+def test_every_level_above_two_is_one_action(spark, generated):
+    """One clique pass mines every level k >= 3: a mine reaching k=4
+    launches as many jobs as the same mine capped at k=3."""
+    d, mp = generated.d, generated.min_prev
+    full, n_full = _jobs_under_group(
+        spark, "test-jobs-to-k4",
+        lambda: eng.ColocationMiner(spark, eng.ColocationConfig(d, mp)).mine(generated.df),
+    )
+    capped, n_capped = _jobs_under_group(
+        spark, "test-jobs-to-k3",
+        lambda: eng.ColocationMiner(
+            spark, eng.ColocationConfig(d, mp, max_pattern_size=3)
+        ).mine(generated.df),
+    )
+    assert max(len(p) for p in full.patterns) == 4
+    assert max(len(p) for p in capped.patterns) == 3
+    assert n_full == n_capped
+
+
+def test_star_cliques_match_brute_force_enumeration():
+    """The clique kernel on one bucket holding every center equals an
+    itertools enumeration of the rank-increasing cliques, with ids that
+    repeat across features and a repeated path row."""
+    import itertools
+
+    import pandas as pd
+
+    from efficient_co_location_pattern_mining_in_large_spatial_datasets_with_rare_features_spark.plans.miner import (
+        star_cliques,
+    )
+
+    rng = np.random.default_rng(5)
+    inst = [(f, i) for f in range(4) for i in range(6)]
+    edges = {(a, b) for a in inst for b in inst if a[0] < b[0] and rng.random() < 0.45}
+    rows = []
+    for c, u in sorted(edges):
+        nxt = [v for (x, v) in sorted(edges) if x == u] or [u]
+        rows += [(*c, *u, *v) for v in nxt]
+    paths = pd.DataFrame(rows + rows[:1], columns=["c_f", "c_id", "member_f", "member_id", "v_f", "v_id"])
+    got = star_cliques(4, 4)(paths)
+    want: dict = {}
+    for k in (3, 4):
+        for q in itertools.combinations(inst, k):
+            if all(q[i][0] < q[i + 1][0] for i in range(k - 1)) and all(
+                (a, b) in edges for a, b in itertools.combinations(q, 2)
+            ):
+                name = ",".join(str(f) for f, _ in q)
+                for pos, (_, i) in enumerate(q):
+                    want[(name, pos, i)] = want.get((name, pos, i), 0) + 1
+    assert want and len({key[0] for key in want}) > 4
+    assert dict(zip(zip(got["pattern"], got["pos"], got["id"]), got["n"])) == want
 
 
 def test_duplicate_id_fallback_launches_no_extra_jobs(spark, generated):
@@ -161,19 +215,30 @@ def test_checkpoint_resume_identical(spark, generated, tmp_path):
     shutil.rmtree(os.path.join(ck, "level_3"))
     res_resumed = eng.ColocationMiner(spark, cfg).mine(generated.df, resume=True)
     _assert_oracle(res_resumed, generated)
-    # manifests carry row counts and per-partition lineage metrics
+    # manifests carry the row counts of the in-memory mine's levels
     import json
 
-    n_pairs = len(generated.info["pairs"])
+    rows = {
+        lv.k: lv.table_rows
+        for lv in eng.ColocationMiner(
+            spark, eng.ColocationConfig(generated.d, generated.min_prev)
+        ).mine(generated.df).levels
+    }
     with open(os.path.join(ck, "level_2", "manifest.json")) as f:
         m = json.load(f)
-    assert m["row_count"] == n_pairs
-    assert sum(c for _, c in m["partition_row_counts"]) == n_pairs
+    assert m["row_count"] == rows[2] == len(generated.info["pairs"])
     assert m["lineage"]["config"]["neighbor_distance"] == generated.d
-    # the lazily checkpointed level-3 table was written in full
     with open(os.path.join(ck, "level_3", "manifest.json")) as f:
         m3 = json.load(f)
-    assert m3["row_count"] == sum(c for _, c in m3["partition_row_counts"]) > 0
+    assert m3["row_count"] == rows[3] > 0
+    # simulate failure in the last level: only its manifest is lost, and
+    # the resume mines that level alone
+    last = max(rows)
+    os.remove(os.path.join(ck, f"level_{last}", "manifest.json"))
+    res_last = eng.ColocationMiner(spark, cfg).mine(generated.df, resume=True)
+    _assert_oracle(res_last, generated)
+    assert [lv.k for lv in res_last.levels] == [last]
+    assert os.path.isfile(os.path.join(ck, f"level_{last}", "manifest.json"))
     # resuming under a different semantic config must refuse, not mix levels
     cfg_changed = eng.ColocationConfig(generated.d - 1.0, generated.min_prev, checkpoint_dir=ck)
     with pytest.raises(ValueError, match="checkpoint was mined under"):
@@ -302,23 +367,40 @@ def test_max_pattern_size_cap(spark, generated):
     assert {tuple(p) for p in res.patterns} == {p for p in generated.patterns if len(p) == 2}
 
 
-def test_ids_repeating_across_features_mine_like_unique_ids(spark, generated):
+def test_ids_repeating_across_features_mine_like_unique_ids(spark, generated, generated_wide):
     """Ids need only be unique within a feature: with the feature prefix
-    stripped (A3 and B3 both become 3), a size-2 mine equals the oracle's
-    answer on the prefixed ids."""
+    stripped (A3 and B3 both become 3), a mine of every size equals the
+    oracle's answer on the prefixed ids."""
     from pyspark.sql import functions as F
 
-    stripped = generated.df.withColumn("id", F.expr("substring(id, 2)"))
-    assert stripped.select("id").distinct().count() < len(generated.rows)
-    cfg = eng.ColocationConfig(generated.d, generated.min_prev, max_pattern_size=2)
-    res = eng.ColocationMiner(spark, cfg).mine(stripped)
-    wpi = {p: w for p, w in generated.info["wpi"].items() if len(p) == 2}
-    assert {tuple(p) for p in res.patterns} == set(wpi)
-    assert res.wpi.keys() == wpi.keys()
-    for p, w in wpi.items():
-        assert abs(res.wpi[p] - w) < 1e-12, p
-    assert res.pair_count == len(generated.info["pairs"])
-    assert abs(res.delta - generated.info["delta"]) < 1e-12
+    for g in (generated, generated_wide):
+        stripped = g.df.withColumn("id", F.expr("substring(id, 2)"))
+        assert stripped.select("id").distinct().count() < len(g.rows)
+        res = eng.ColocationMiner(spark, eng.ColocationConfig(g.d, g.min_prev)).mine(stripped)
+        assert max(len(p) for p in res.patterns) >= 3
+        _assert_oracle(res, g)
+
+
+@pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
+def test_two_triangles_sharing_ids_across_features(spark, plan):
+    """Six points, A/B/C x ids "1" and "2", form two triangles: instances
+    are (feature, id), so {A, B, C} is found at WPI 1.0 beside its pairs."""
+    rows = [
+        ("A", "1", 0.0, 0.0), ("B", "1", 1.0, 0.0), ("C", "1", 0.0, 1.0),
+        ("A", "2", 10.0, 10.0), ("B", "2", 11.0, 10.0), ("C", "2", 10.0, 11.0),
+    ]
+    df = spark.createDataFrame(rows, "feature string, id string, x double, y double")
+    res = getattr(eng.ColocationMiner(spark, eng.ColocationConfig(2.0, 0.5)), plan)(df)
+    assert sorted(res.patterns) == [("A", "B"), ("A", "B", "C"), ("A", "C"), ("B", "C")]
+    assert res.wpi[("A", "B", "C")] == 1.0
+    assert res.pair_count == 6
+
+
+@pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
+def test_empty_input_gives_empty_result(spark, plan):
+    df = spark.createDataFrame([], "feature string, id string, x double, y double")
+    res = getattr(eng.ColocationMiner(spark, eng.ColocationConfig(2.0, 0.5)), plan)(df)
+    assert (res.patterns, res.wpi, res.pair_count, res.delta) == ([], {}, 0, 0.0)
 
 
 @pytest.mark.parametrize("checkpoint", [False, True])
