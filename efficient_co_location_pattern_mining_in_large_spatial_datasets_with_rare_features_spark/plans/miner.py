@@ -578,7 +578,8 @@ class ColocationMiner:
         nf = len(self._rank)
         ranked = {(self._rank[f], self._rank[g]) for f, g in pairs}
         # a member edge u -> v can close a triangle only if some center
-        # feature forms a prevalent pair with both u's and v's feature
+        # feature forms a prevalent pair with both u's and v's feature (its
+        # own pair may not be: Lemma 2 asks it only of subsets keeping c[0])
         closing = {(g, h) for f, g in ranked for f2, h in ranked if f == f2 and g < h}
 
         def star(pairs: set[tuple[int, int]], *names: str) -> DataFrame:
@@ -828,8 +829,9 @@ class ColocationMiner:
         Checkpoint/resume: level 2 is the shared ``level_2/``, and each
         subtree writes its levels k >= 3 under ``subtree_<root_rank>/``, so
         ``mine_subtrees(resume=True)`` resumes the level 2 of either plan
-        and restarts every subtree after its own last complete level — a
-        failure mid-run costs at most one level per in-flight subtree.
+        and restarts every subtree after its own last complete level.  The
+        manifests save only the driver's selection: if any subtree still
+        has a level to mine, the resume reruns the one clique pass.
         Per-subtree ``level_2`` checkpoints of older layouts are not
         resumed: such a run starts from scratch.
         """
@@ -848,9 +850,6 @@ class ColocationMiner:
         return res
 
     # ------------------------------------------------------- plan selector
-    # Crossover measured on the per-level plan, whose subtree threads
-    # overlapped one driver barrier per level (BENCH/BASELINE.md "Plan
-    # choice at this scale"); the clique pass left no such barrier.
     AUTO_SUBTREE_THRESHOLD = 1_000_000
 
     def mine_auto(
@@ -864,7 +863,10 @@ class ColocationMiner:
         level-wise (``mine``) below ``AUTO_SUBTREE_THRESHOLD`` instances,
         per-subtree concurrent (``mine_subtrees``) at or above it.  Both
         plans produce identical results (Lemma 5/6 — see
-        ``mine_subtrees``), so this only picks the faster schedule.
+        ``mine_subtrees``), so this only picks a schedule.  The threshold
+        was measured on the per-level plan (BENCH/BASELINE.md "Plan choice
+        at this scale") and is unverified for the clique pass, which both
+        plans share, so they differ only in driver-side selection.
 
         ``n_instances`` skips the sizing ``count()`` when the caller
         already knows the cardinality (e.g. from table stats).

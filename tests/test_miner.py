@@ -397,6 +397,25 @@ def test_two_triangles_sharing_ids_across_features(spark, plan):
 
 
 @pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
+def test_prevalent_triple_over_a_non_prevalent_pair(spark, plan):
+    """WPI weights a feature by its deviation from the pattern's rarest
+    one, so {A, B, C} can be prevalent while {B, C} is not: Lemma 2 only
+    requires the subsets that keep A.  The clique pass must therefore close
+    triangles along member edges of every pair, prevalent or not."""
+    rows = [
+        ("A", "A1", 0.0, 0.0), ("B", "B1", 1.0, 0.0), ("C", "C1", 0.0, 1.0),
+        ("A", "A2", 10.0, 10.0), ("B", "B2", 11.0, 10.0), ("C", "C2", 10.0, 11.0),
+    ]
+    rows += [(f, f"{f}{i}", 100.0 + 10 * i, 50.0 * (f == "C")) for f in "BC" for i in range(3, 11)]
+    pats, info = oracle.brute_force_mine(rows, 2.0, 0.3)
+    assert pats == {("A", "B"), ("A", "C"), ("A", "B", "C")}
+    df = spark.createDataFrame(rows, "feature string, id string, x double, y double")
+    res = getattr(eng.ColocationMiner(spark, eng.ColocationConfig(2.0, 0.3)), plan)(df)
+    assert set(res.patterns) == pats
+    assert res.wpi == pytest.approx(info["wpi"])
+
+
+@pytest.mark.parametrize("plan", ["mine", "mine_subtrees"])
 def test_empty_input_gives_empty_result(spark, plan):
     df = spark.createDataFrame([], "feature string, id string, x double, y double")
     res = getattr(eng.ColocationMiner(spark, eng.ColocationConfig(2.0, 0.5)), plan)(df)
