@@ -1,12 +1,12 @@
-"""Resume-wall A/B: durable bucketed edges vs in-session edge recompute.
+"""Resume-wall A/B: durable parquet edges vs in-session edge recompute.
 
 Round-5 verdict #1 done-criterion.  Scenario: a full checkpointed mining
 run at sf0.1 (d=6, 100k instances), then a simulated failure after the
 second-to-last level (the last level's manifest is deleted), then resume:
 
-- arm "bucketed" (round-6 code): the resume re-attaches the bucketed
-  edge table written under <ckpt>/edges and mines the missing level —
-  the pairs -> stars -> edges pipeline never runs;
+- arm "durable": the resume reads back the edge table written under
+  <ckpt>/edges and mines the missing level — the pairs -> stars -> edges
+  pipeline never runs;
 - arm "recompute" (round-5 behavior, monkeypatched back in): the resume
   rebuilds edges from the instance table through the stencil join +
   repartition before mining the missing level.
@@ -87,9 +87,9 @@ def main() -> None:
         assert {frozenset(p) for p in res.patterns} == gold, arm
         return wall
 
-    walls: dict[str, list[float]] = {"bucketed": [], "recompute": []}
+    walls: dict[str, list[float]] = {"durable": [], "recompute": []}
     for _ in range(ROUNDS):
-        for arm in ("recompute", "bucketed"):
+        for arm in ("recompute", "durable"):
             w = run(arm)
             walls[arm].append(round(w, 3))
             print(f"[resume_ab] {arm} {w:.3f}s", file=sys.stderr, flush=True)
@@ -102,10 +102,10 @@ def main() -> None:
         "full_mine_wall": round(full_wall, 3),
         "resumed_level": last,
         "walls": walls,
-        "resume_bucketed_best": min(walls["bucketed"]),
+        "resume_durable_best": min(walls["durable"]),
         "resume_recompute_best": min(walls["recompute"]),
         "edge_reuse_speedup": round(
-            min(walls["recompute"]) / min(walls["bucketed"]), 3
+            min(walls["recompute"]) / min(walls["durable"]), 3
         ),
         "patterns": len(base.patterns),
     }

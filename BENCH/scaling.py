@@ -26,8 +26,8 @@ sys.path.insert(0, "/root/repo")
 
 # Default workload: 2M instances (20x replicated sf0.1 events), d=1.0 ->
 # 20.2M neighbor pairs, k<=3, per-instance degree ~10 (the regime real
-# mining configs run at — cf. bench.py's D rationale).  With the subtree
-# plan this measures 0.88 scaling efficiency 2->8 cores; denser graphs
+# mining configs run at — cf. bench.py's D rationale).  The former subtree
+# plan measured 0.88 scaling efficiency 2->8 cores here; denser graphs
 # (d=2: degree ~17, 35M pairs) shift the mix toward shuffle bandwidth,
 # which a single socket cannot scale (see BASELINE.md's pure-CPU control).
 REP = int(os.environ.get("SPARK_GRAFT_SCALE_REP", "20"))
@@ -135,10 +135,7 @@ def run_one(cpus: int) -> dict:
             salt_threshold=None,
         ),
     )
-    if os.environ.get("SPARK_GRAFT_SCALE_PLAN", "subtree") == "subtree":
-        res = miner.mine_subtrees(inst)
-    else:
-        res = miner.mine(inst)
+    res = miner.mine(inst)
     wall = time.time() - t0
     out = {
         "cpus": cpus,

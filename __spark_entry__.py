@@ -454,8 +454,8 @@ def _q_prevalent_k2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _mine_rows(spark: SparkSession, sf_dir: str, method: str) -> list:
-    """Canonical (pattern, size, wpi) rows from one mining physical plan
-    (``mine`` = level-wise, ``mine_subtrees`` = Algorithm-3 subtree)."""
+    """Canonical (pattern, size, wpi) rows from ``mine`` or its alias
+    ``mine_subtrees``."""
     inst = instances_from_events(spark, sf_dir)
     miner = eng.ColocationMiner(spark, eng.ColocationConfig(D, MIN_PREV))
     res = getattr(miner, method)(inst)
@@ -476,9 +476,10 @@ def _q_mine_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_mine_plans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOTH mining physical plans (level-wise `mine` and Algorithm-3
-    per-subtree `mine_subtrees`) hash-checked side by side against ONE
-    brute-force clique oracle, labeled by a ``plan`` column.
+    """`mine` and its alias `mine_subtrees` (formerly the Algorithm-3
+    per-subtree plan) hash-checked side by side against ONE brute-force
+    clique oracle, labeled by a ``plan`` column; the labels and rows are
+    unchanged since the two were separate plans.
 
     Round-8 consolidation: subsumes the former ``colocation_mine_full``
     and ``colocation_mine_subtree`` entries (identical schema, identical

@@ -334,13 +334,6 @@ def main() -> None:
             spark, eng.ColocationConfig(BENCH_D, BENCH_MIN_PREV)
         ).mine(inst),
     )
-    # the Algorithm-3 subtree plan (the scaling flagship) on the same input
-    timed(
-        "colocation_mine_subtree",
-        lambda: eng.ColocationMiner(
-            spark, eng.ColocationConfig(BENCH_D, BENCH_MIN_PREV)
-        ).mine_subtrees(inst),
-    )
     grid = compute_bounds(inst, BENCH_D)
     timed("tile_counts", lambda: tile_counts(inst, grid).count())
 

@@ -35,28 +35,26 @@ Reference-semantics riders replicated exactly (FIXTURES.md §5):
   with no table rows has PR = 0 and prunes (src/utils.cpp:171-181);
 - only sizes k >= 2 are emitted (src/miner.cpp:53-57,91).
 
-Both plans are one prologue and one level loop.  The prologue runs once
-per call (``_prologue``): the stats aggregate, the string-id fallback, the
-persisted edge table and one global level 2 over every rank-ordered pair.
-The level loop (``_mine_scope``) then mines k >= 3 for a scope: ``mine``
-runs one scope over all features (paper Algorithm 2), ``mine_subtrees``
-one scope per rarest feature from a thread pool (Algorithm 3).  Every scope
-shares the one clique pass.
+The paper's Algorithm 3 (§5.2) parallelizes mining by ordered star; the
+clique pass is that partitioning, inside Spark.  ``mine`` is the one plan:
+the stats aggregate, the string-id fallback, the edge table and level 2,
+then a driver-side level loop over the one clique pass
+(``mine_subtrees`` is an alias kept for callers of the old name).
 
 Spark actions: one stats aggregate before level 2 (feature histogram,
 coordinate check, the pair join's hot cells and the id-hash check, see
 ``_stats``), one level-2 participation collect, and one collect of the
-clique pass for every level k >= 3, run only if some scope reaches k = 3.
+clique pass for every level k >= 3, run only if such a level has
+candidates.
 No action runs on a background thread.
 
 Checkpoint/resume: with ``config.checkpoint_dir`` set, the edges are
-written once as a bucketed parquet table and each level writes a JSON
-manifest carrying its row count, candidates, prevalent set, PI and WPI maps
-and lineage.  Level 2 is shared by both plans (``level_2/``); levels k >= 3
-go to ``level_<k>/`` (``mine``) or ``subtree_<rank>/level_<k>/``
-(``mine_subtrees``).  ``resume=True`` replays level 2 and then, per scope,
-the unbroken chain of manifests above it, and runs the clique pass only if
-a scope still has levels to mine; either plan resumes the other's level 2.
+written once as plain parquet (``edges/``) and each level writes a JSON
+manifest to ``level_<k>/`` carrying its row count, candidates, prevalent
+set, PI and WPI maps and lineage.  ``resume=True`` checks the manifests'
+config before any Spark job or write, replays the unbroken chain of
+levels from level 2, and runs the clique pass only if a level is left to
+mine.
 """
 
 from __future__ import annotations
@@ -64,12 +62,9 @@ from __future__ import annotations
 import glob
 import json
 import os
-import threading
 import time
-from collections.abc import Callable, Iterator, Mapping, Sequence
-from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
-from dataclasses import dataclass, field, replace
+from collections.abc import Callable, Mapping, Sequence
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -205,7 +200,6 @@ def filter_candidates(
     counts: Mapping[str, int],
     delta_value: float,
     min_prev: float,
-    use_lemma3: bool = True,
 ) -> list[Pattern]:
     """Lemma-2 + Lemma-3 pruning (reference src/miner.cpp:152-215).
 
@@ -217,10 +211,6 @@ def filter_candidates(
     - Lemma 3 (upper bound, :188-208): for the subset that drops f_min,
       ``PI(c[1:]) * w(f_max, C) >= min_prev`` must hold; a subset missing
       from the previous level's tables contributes PI = 0 and prunes.
-
-    ``use_lemma3=False`` is the per-subtree mode (paper Algorithm 3 /
-    Lemma 6): the subset dropping f_min lives in a *different* subtree, so
-    its PI is unavailable there and the Lemma-3 bound cannot be applied.
     """
     kept = []
     for c in candidates:
@@ -230,9 +220,6 @@ def filter_candidates(
             if sub not in prevalent_prev:
                 ok = False
                 break
-        if ok and not use_lemma3:
-            kept.append(c)
-            continue
         if ok:
             sub0 = c[1:]
             pi_val = pi_prev.get(sub0, 0.0)
@@ -261,6 +248,7 @@ class LevelStats:
     n_prevalent: int
     table_rows: int
     seconds: float
+    #: always None: kept for readers of the former per-subtree plan's stats
     subtree: str | None = None
 
 
@@ -295,7 +283,7 @@ class MiningResult:
 
 @dataclass
 class _Level:
-    """The last mined level of a scope: what the next level extends."""
+    """The last mined level: what the next level extends."""
 
     k: int
     prevalent: list[Pattern]
@@ -312,7 +300,7 @@ class ColocationMiner:
         self.config = config
         #: (grid, hot cells) of the pair join, counted by ``_stats``
         self._pair_plan = (None, None)
-        #: whether this call's tables carry xxhash64 ids, set by ``_prologue``
+        #: whether this call's tables carry xxhash64 ids, set by ``mine``
         self._encode_ids = True
 
     # ------------------------------------------------------------------ io
@@ -339,11 +327,9 @@ class ColocationMiner:
         prevalent: list[Pattern],
         pi_map: dict[Pattern, float],
         wpi_map: dict[Pattern, float],
-        subdir: str | None = None,
     ) -> None:
         if not self.config.checkpoint_dir:
             return
-        parts = ([subdir] if subdir else []) + [f"level_{k}"]
         manifest = {
             "level": k,
             "row_count": table_rows,
@@ -357,46 +343,45 @@ class ColocationMiner:
                 "written_at": time.time(),
             },
         }
-        self._dump_json(self._ckpt_path(*parts, "manifest.json"), manifest)
+        self._dump_json(self._ckpt_path(f"level_{k}", "manifest.json"), manifest)
 
-    def _load_manifests(self, subdir: str | None = None, first: int = 2) -> list[dict]:
-        """The unbroken chain of level manifests from level ``first`` in the
-        checkpoint dir (or its ``subdir``): a level after a missing one was
-        written before it, by another run, and is not resumed."""
+    def _load_manifests(self) -> list[dict]:
+        """The unbroken chain of level manifests from level 2 in the
+        checkpoint dir: a level after a missing one was written before it,
+        by another run, and is not resumed."""
         chain: list[dict] = []
         if not self.config.checkpoint_dir:
             return chain
-        while True:
-            parts = ([subdir] if subdir else []) + [f"level_{first + len(chain)}", "manifest.json"]
-            if not os.path.exists(self._ckpt_path(*parts)):
-                return chain
-            with open(self._ckpt_path(*parts)) as f:
+        while os.path.exists(path := self._ckpt_path(f"level_{2 + len(chain)}", "manifest.json")):
+            with open(path) as f:
                 chain.append(json.load(f))
+        return chain
 
-    def _validate_manifest_config(self, last: dict) -> None:
+    def _validate_manifest_config(self, chain: list[dict]) -> None:
         """Checkpointed levels were mined under a specific semantic config;
         silently mixing levels from different (d, min_prev, cap) — or exact
         vs HLL-approximate participation — would corrupt the result set.
         Refuse to resume on mismatch.  (Older manifests without an
         approx_rsd or max_pattern_size key read as None.)"""
-        ck = last["lineage"]["config"]
-        mined = {f: ck.get(f) for f in self.SEMANTIC_FIELDS}
         active = {f: getattr(self.config, f) for f in self.SEMANTIC_FIELDS}
-        if mined != active:
-            raise ValueError(
-                f"checkpoint was mined under config {mined} but the active "
-                f"config is {active}; clear {self.config.checkpoint_dir} or "
-                "match the config to resume"
-            )
+        for m in chain:
+            ck = m["lineage"]["config"]
+            mined = {f: ck.get(f) for f in self.SEMANTIC_FIELDS}
+            if mined != active:
+                raise ValueError(
+                    f"checkpoint was mined under config {mined} but the active "
+                    f"config is {active}; clear {self.config.checkpoint_dir} or "
+                    "match the config to resume"
+                )
 
     def _invalidate_manifests(self) -> None:
-        """Remove every level manifest (levelwise and per-subtree) AND the
-        edge-table manifest so no later resume can mix id encodings after
-        a collision fallback (the bucketed edge files carry tainted
-        encoded ids; the fallback rewrites them as strings)."""
+        """Remove every level manifest AND the edge-table manifest so no
+        later resume can mix id encodings after a collision fallback (the
+        edge files carry tainted encoded ids; the fallback rewrites them as
+        strings)."""
         ck = self.config.checkpoint_dir
         if ck:
-            levels = glob.glob(os.path.join(ck, "**", "level_*", "manifest.json"), recursive=True)
+            levels = glob.glob(os.path.join(ck, "level_*", "manifest.json"))
             for path in levels + glob.glob(os.path.join(ck, "edges_manifest.json")):
                 os.remove(path)
 
@@ -476,9 +461,6 @@ class ColocationMiner:
             (F.xxhash64("nbr_id") if encode_ids else F.col("nbr_id")).alias("nbr_id"),
         )
 
-    #: bucket columns of the checkpointed edge table
-    EDGE_BUCKET_COLS = ("center_id", "nbr_feature")
-
     def _edges_ddl(self, encode_ids: bool) -> str:
         idt = "BIGINT" if encode_ids else "STRING"
         return f"center_feature INT, center_id {idt}, nbr_feature INT, nbr_id {idt}"
@@ -491,55 +473,35 @@ class ColocationMiner:
         encode_ids: bool,
         resume: bool,
     ) -> DataFrame:
-        """The edge table level 2 and the clique pass read — durable and
-        bucketed when checkpointing.
+        """The edge table level 2 and the clique pass read — durable when
+        checkpointing.
 
-        Without a checkpoint dir: the in-session plan (the prologue caches
-        it).  With one: the edges are written ONCE as a parquet table
-        bucketed+sorted on (center_id, nbr_feature) under
-        ``<checkpoint_dir>/edges``, and a RESUME (same or new session) re-attaches the layout via
-        ``ensure_bucketed_table`` and skips the entire pairs -> stars ->
-        edges recompute (the dominant fixed cost of re-mining; see
-        BENCH/resume_ab.py).  The edge manifest pins neighbor_distance and
-        the id encoding — the same trust model as level manifests."""
+        Without a checkpoint dir: the in-session plan (``mine`` caches it).
+        With one: the edges are written ONCE as plain parquet under
+        ``<checkpoint_dir>/edges``, and a RESUME (same or new session) reads
+        them back and skips the entire pairs -> stars -> edges recompute
+        (the dominant fixed cost of re-mining; see BENCH/resume_ab.py).
+        The edge manifest pins neighbor_distance and the id encoding — the
+        same trust model as level manifests.  Edges written bucketed by
+        older versions are parquet files as well, so they resume too."""
         cfg = self.config
         if not cfg.checkpoint_dir:
             return self._encoded_edges(instances, counts, rank, encode_ids)
-        import hashlib
-
-        from ..sources.bucketed import ensure_bucketed_table, write_bucketed
-
-        os.makedirs(cfg.checkpoint_dir, exist_ok=True)
-        table = "colocation_edges_" + hashlib.md5(
-            os.path.abspath(cfg.checkpoint_dir).encode()
-        ).hexdigest()[:10]
         path = self._ckpt_path("edges")
         man_path = self._ckpt_path("edges_manifest.json")
-        cols = list(self.EDGE_BUCKET_COLS)
-        if resume and os.path.exists(man_path):
+        pinned = {"neighbor_distance": cfg.neighbor_distance, "encode_ids": encode_ids}
+        # an explicit schema: inferring it would launch a job
+        reader = self.spark.read.schema(self._edges_ddl(encode_ids))
+        if resume and os.path.exists(man_path) and os.path.isdir(path):
             with open(man_path) as f:
                 man = json.load(f)
-            if (
-                man["neighbor_distance"] == cfg.neighbor_distance
-                and man["encode_ids"] == encode_ids
-                and os.path.isdir(path)
-            ):
-                return ensure_bucketed_table(
-                    self.spark, table, path, self._edges_ddl(encode_ids),
-                    cols, man["num_buckets"],
-                )
-            # stale layout (different d / encoding): fall through and rewrite
-        nbuckets = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            if all(man.get(key) == v for key, v in pinned.items()):
+                return reader.parquet(path)
+            # stale edges (different d / encoding): fall through and rewrite
         edges = self._encoded_edges(instances, counts, rank, encode_ids)
-        out = write_bucketed(edges, table, path, cols, nbuckets)
-        self._dump_json(man_path, {
-            "neighbor_distance": cfg.neighbor_distance,
-            "encode_ids": encode_ids,
-            "num_buckets": nbuckets,
-            "table": table,
-            "written_at": time.time(),
-        })
-        return out
+        edges.write.mode("overwrite").parquet(path)
+        self._dump_json(man_path, {**pinned, "written_at": time.time()})
+        return reader.parquet(path)
 
     def build_pairs(self, instances: DataFrame) -> DataFrame:
         """Neighbor pairs on the grid and hot cells ``_stats`` counted."""
@@ -554,11 +516,6 @@ class ColocationMiner:
             grid=grid,
             hot_cells=hot,
         )
-
-    def _last_k(self, counts: Mapping[str, int]) -> int:
-        """The largest pattern size a scope mines."""
-        cap = self.config.max_pattern_size
-        return len(counts) if cap is None else min(len(counts), cap)
 
     def _table_k(self, edges: DataFrame, pairs: Sequence[Pattern], last_k: int) -> DataFrame:
         """The clique pass, lazily: participation ``(pattern, pos, n,
@@ -654,7 +611,7 @@ class ColocationMiner:
     # -------------------------------------------------------------- driver
     def _finish_level(
         self, res: MiningResult, k: int, n_candidates: int, filtered: list[Pattern],
-        participation: Participation, t0: float, root: str | None = None,
+        participation: Participation, t0: float,
     ) -> _Level:
         """Select level k's prevalent patterns from ``_participation``'s
         output, checkpoint the level and record it in ``res``."""
@@ -663,75 +620,75 @@ class ColocationMiner:
         prevalent, pi_map, wpi_map = self._select_prevalent(
             filtered, part, res.counts, res.delta
         )
-        subdir = None if root is None else f"subtree_{self._rank[root]}"
-        self._write_level(k, table_rows, filtered, prevalent, pi_map, wpi_map, subdir=subdir)
+        self._write_level(k, table_rows, filtered, prevalent, pi_map, wpi_map)
         res.patterns.extend(prevalent)
         res.wpi.update((c, wpi_map[c]) for c in prevalent)
         res.levels.append(
             LevelStats(k, n_candidates, len(filtered), len(prevalent), table_rows,
-                       time.time() - t0, root)
+                       time.time() - t0)
         )
         return _Level(k, prevalent, pi_map)
 
     def _replay(self, chain: list[dict], res: MiningResult) -> _Level:
         """Add a checkpointed chain's patterns to ``res`` and return its last
         level."""
-        last = chain[-1]
-        self._validate_manifest_config(last)
         for m in chain:
             prevalent = [tuple(p) for p in m["prevalent"]]
             res.patterns.extend(prevalent)
             res.wpi.update((p, m["wpi"][",".join(p)]) for p in prevalent)
+        last = chain[-1]
         return _Level(
             last["level"], prevalent, {tuple(p.split(",")): v for p, v in last["pi"].items()}
         )
 
-    @contextmanager
-    def _prologue(
-        self, instances: DataFrame, resume: bool, encode_ids: bool
-    ) -> Iterator[tuple[MiningResult, Callable[[], Participation], _Level, bool]]:
-        """What both plans run once per call: stats, the string-id fallback,
-        the persisted edge table and the global level 2 (mined, or replayed
-        from ``level_2/``).
+    # ---------------------------------------------------------------- mine
+    def mine(
+        self, instances: DataFrame, resume: bool = False, _encode: bool = True
+    ) -> MiningResult:
+        """Mine every prevalent pattern: level 2 off the star edges, then
+        each level k >= 3 on the driver, with participation from the one
+        clique pass (paper Algorithm 2's level loop over Algorithm 3's
+        partitioning by ordered star).
 
-        Yields the result so far (level 2), the clique pass, level 2 and
-        whether it was resumed, in which case the scopes may resume levels
-        k >= 3.  The pass is a callable that runs ``_table_k`` on first use
-        and returns its participation to every later caller, from any
-        thread; the edges are unpersisted on exit."""
-        level2 = self._load_manifests()[:1] if resume else []
-        if level2:
-            # keep the checkpoint's id representation, so its bucketed edges
-            # are reused and a string-id run is not detected and restarted
-            encode_ids = level2[0]["lineage"].get("encode_ids", True)
+        ``resume=True`` replays the checkpoint's unbroken chain of levels
+        and mines only the levels after it.  A checkpoint mined under
+        another semantic config raises ``ValueError`` before any Spark job
+        runs or any checkpoint file is written."""
+        cfg = self.config
+        chain = self._load_manifests() if resume else []
+        encode_ids = _encode
+        if chain:
+            self._validate_manifest_config(chain)
+            # keep the checkpoint's id representation, so its edges are
+            # reused and a string-id run is not detected and restarted
+            encode_ids = chain[0]["lineage"].get("encode_ids", True)
         counts, rank, delta_value, join_check = self._stats(
             instances, check_hashes=encode_ids
         )
+        res = MiningResult([], {}, counts, delta_value, 0)
         if not counts:  # empty input: no pairs, no patterns
-            yield MiningResult([], {}, counts, delta_value, 0), None, _Level(2, [], {}), False
-            return
+            return res
         # Duplicate or colliding ids: mine with exact string ids instead (the
         # stats above do not depend on ids).  Every checkpoint of an earlier
         # encoded run is invalidated so no later resume can mix encodings.
         if encode_ids and not join_check():
             self._invalidate_manifests()
-            encode_ids, resume, level2 = False, False, []
+            encode_ids, resume, chain = False, False, []
         self._encode_ids = encode_ids
         # pairs -> edges is one linear pipeline; only the edges are kept (one
         # edge per pair, so pair_count == T_2 rows: no count job over either)
         edges = self._edge_table(instances, counts, rank, encode_ids, resume).persist()
         try:
-            res = MiningResult([], {}, counts, delta_value, 0)
-            if level2:
-                top = self._replay(level2, res)
-                res.pair_count = level2[0]["row_count"]
+            if chain:
+                top = self._replay(chain, res)
+                res.pair_count = chain[0]["row_count"]
             else:
                 t0 = time.time()
                 # C_2 = all rank-ordered feature pairs; no Lemma filtering
                 # (reference src/miner.cpp:64-71).  The star edge IS the
                 # size-2 row instance, so the counts come straight off the
                 # edges.
-                ranked = measures.rank_features(counts)
+                ranked = self._features
                 filtered = [(f, g) for i, f in enumerate(ranked) for g in ranked[i + 1 :]]
                 pairs = edges.groupBy("center_feature", "nbr_feature").agg(
                     self._ndistinct("center_id").alias("n0"),
@@ -745,149 +702,39 @@ class ColocationMiner:
                 ))
                 res.pair_count = sum(participation[1].values())
                 top = self._finish_level(res, 2, len(filtered), filtered, participation, t0)
-            lock, memo = threading.Lock(), []
-
-            def cliques() -> Participation:
-                with lock:
-                    if not memo:
-                        table = self._table_k(edges, top.prevalent, self._last_k(counts))
-                        memo.append(self._participation(table))
-                return memo[0]
-
-            yield res, cliques, top, bool(level2)
+            cap = cfg.max_pattern_size
+            last_k = len(counts) if cap is None else min(len(counts), cap)
+            cliques = None
+            while top.prevalent and top.k < last_k:
+                t0 = time.time()
+                candidates = generate_candidates(top.prevalent, rank)
+                filtered = filter_candidates(
+                    candidates, set(top.prevalent), top.pi, counts, delta_value,
+                    cfg.min_prevalence,
+                )
+                if not filtered:
+                    break
+                if cliques is None:
+                    # one pass for every level left, pruned by the prevalent
+                    # pairs (mined above or replayed)
+                    prevalent_pairs = [p for p in res.patterns if len(p) == 2]
+                    cliques = self._participation(
+                        self._table_k(edges, prevalent_pairs, last_k)
+                    )
+                top = self._finish_level(
+                    res, top.k + 1, len(candidates), filtered, cliques, t0
+                )
         finally:
             edges.unpersist()
-
-    def _mine_scope(
-        self, res: MiningResult, cliques: Callable[[], Participation], top: _Level,
-        root: str | None = None, resume: bool = False,
-    ) -> None:
-        """The level loop: mine levels k >= 3 of one scope into ``res``,
-        starting from level 2 ``top``, with participation from the clique
-        pass ``cliques``.
-
-        The scope is every feature (``root`` None, with Lemma 3) or the
-        subtree of the patterns whose rarest feature is ``root``: it starts
-        from the prevalent pairs led by ``root``, runs without Lemma 3 and
-        checkpoints under ``subtree_<rank>/``.  ``resume`` continues after
-        the scope's last checkpointed level."""
-        cfg = self.config
-        subdir = None
-        if root is not None:
-            subdir = f"subtree_{self._rank[root]}"
-            top = replace(top, prevalent=[p for p in top.prevalent if p[0] == root])
-        chain = self._load_manifests(subdir, first=3) if resume else []
-        if chain:
-            top = self._replay(chain, res)
-        while top.prevalent and top.k < self._last_k(res.counts):
-            t0 = time.time()
-            candidates = generate_candidates(top.prevalent, self._rank)
-            filtered = filter_candidates(
-                candidates, set(top.prevalent), top.pi, res.counts, res.delta,
-                cfg.min_prevalence, use_lemma3=root is None,
-            )
-            if not filtered:
-                break
-            top = self._finish_level(
-                res, top.k + 1, len(candidates), filtered, cliques(), t0, root
-            )
-
-    # ---------------------------------------------------------------- mine
-    def mine(
-        self, instances: DataFrame, resume: bool = False, _encode: bool = True
-    ) -> MiningResult:
-        """Level-wise plan (paper Algorithm 2): one scope over all features."""
-        with self._prologue(instances, resume, _encode) as (res, cliques, level2, resumed):
-            self._mine_scope(res, cliques, level2, resume=resumed)
         return res
 
     def mine_subtrees(
-        self,
-        instances: DataFrame,
-        max_workers: int = 8,
-        resume: bool = False,
-        _encode: bool = True,
+        self, instances: DataFrame, max_workers: int | None = None, resume: bool = False
     ) -> MiningResult:
-        """Paper Algorithm-3 physical plan (§5.2): partition mining by the
-        pattern's rarest feature.
+        """Alias of ``mine``, for callers of the former per-subtree plan.
 
-        Lemma 5: a pattern's canonical first feature determines its subtree,
-        so per-subtree results are disjoint and the union needs no dedup.
-        Per subtree only Lemma 2 applies (the subset dropping f_min belongs
-        to another subtree — Lemma 3's PI lookup is unavailable; Lemma 6 is
-        its per-subtree replacement and is subsumed here by computing WPI
-        exactly).  Output is identical to ``mine()``: prevalence is
-        intrinsic (WPI >= min_prev over the same cliques) and Lemma 2 makes
-        the per-subtree stopping rule equivalent to the global one.
-
-        Physically: the prologue is shared with ``mine()``; then one
-        level loop per root feature mines k >= 3 from a thread pool, all
-        reading the one clique pass, which the first scope to reach k = 3
-        runs (it prunes with the global level-2 pairs).  Patterns and level
-        stats are merged in root order.
-
-        Checkpoint/resume: level 2 is the shared ``level_2/``, and each
-        subtree writes its levels k >= 3 under ``subtree_<root_rank>/``, so
-        ``mine_subtrees(resume=True)`` resumes the level 2 of either plan
-        and restarts every subtree after its own last complete level.  The
-        manifests save only the driver's selection: if any subtree still
-        has a level to mine, the resume reruns the one clique pass.
-        Per-subtree ``level_2`` checkpoints of older layouts are not
-        resumed: such a run starts from scratch.
-        """
-        with self._prologue(instances, resume, _encode) as (res, cliques, level2, resumed):
-
-            def scope(root: str) -> MiningResult:
-                out = MiningResult([], {}, res.counts, res.delta, res.pair_count)
-                self._mine_scope(out, cliques, level2, root, resumed)
-                return out
-
-            with ThreadPoolExecutor(max_workers=max_workers) as ex:
-                for out in ex.map(scope, measures.rank_features(res.counts)):
-                    res.patterns.extend(out.patterns)
-                    res.wpi.update(out.wpi)
-                    res.levels.extend(out.levels)
-        return res
-
-    # ------------------------------------------------------- plan selector
-    AUTO_SUBTREE_THRESHOLD = 1_000_000
-
-    def mine_auto(
-        self,
-        instances: DataFrame,
-        resume: bool = False,
-        n_instances: int | None = None,
-        max_workers: int = 8,
-    ) -> MiningResult:
-        """Mine with the measured-best physical plan for the input size:
-        level-wise (``mine``) below ``AUTO_SUBTREE_THRESHOLD`` instances,
-        per-subtree concurrent (``mine_subtrees``) at or above it.  Both
-        plans produce identical results (Lemma 5/6 — see
-        ``mine_subtrees``), so this only picks a schedule.  The threshold
-        was measured on the per-level plan (BENCH/BASELINE.md "Plan choice
-        at this scale") and is unverified for the clique pass, which both
-        plans share, so they differ only in driver-side selection.
-
-        ``n_instances`` skips the sizing ``count()`` when the caller
-        already knows the cardinality (e.g. from table stats).
-
-        On ``resume=True`` an existing checkpoint's plan takes precedence
-        over the size heuristic: level 2 is shared, but levels k >= 3 live
-        under ``level_k/`` or ``subtree_*/level_k/``, and switching plans
-        mid-run would mine them again instead of resuming.
-        """
-        ck = self.config.checkpoint_dir
-        if resume and ck and os.path.isdir(ck):
-            subtrees = [n for n in os.listdir(ck) if n.startswith("subtree_")]
-            if any(self._load_manifests(n, first=3) for n in subtrees):
-                return self.mine_subtrees(
-                    instances, max_workers=max_workers, resume=True
-                )
-            if self._load_manifests(first=3):
-                return self.mine(instances, resume=True)
-        n = n_instances if n_instances is not None else instances.count()
-        if n >= self.AUTO_SUBTREE_THRESHOLD:
-            return self.mine_subtrees(
-                instances, max_workers=max_workers, resume=resume
-            )
+        The paper's Algorithm 3 (§5.2) mines the subtree of each rarest
+        feature independently.  ``mine``'s clique pass is that
+        partitioning, one grouped task per bucket of star centers, so there
+        is no second plan.  ``max_workers`` is accepted and ignored."""
         return self.mine(instances, resume=resume)

@@ -124,37 +124,6 @@ def _count_shuffle_nodes(node) -> int:
     return n
 
 
-def ensure_bucketed_table(
-    spark: SparkSession,
-    table: str,
-    path: str,
-    schema_ddl: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int,
-    sort_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Re-attach an EXISTING bucketed parquet layout to the (session-
-    scoped) catalog and return a reader over it.
-
-    ``write_bucketed`` records the bucket spec in the writing session's
-    catalog only; a NEW session resuming from durable state (e.g. the
-    miner's checkpointed edge table) must re-register the layout or the
-    scan degrades to a plain parquet read and every downstream join
-    shuffles again.  Bucket file names carry their bucket id, so a
-    metadata-only CREATE TABLE over the existing files restores the
-    exchange-free path.  No-op when the table is already registered.
-    """
-    if not spark.catalog.tableExists(table):
-        bc = ", ".join(bucket_cols)
-        sc = ", ".join(sort_cols) if sort_cols is not None else bc
-        spark.sql(
-            f"CREATE TABLE {table} ({schema_ddl}) USING PARQUET "
-            f"CLUSTERED BY ({bc}) SORTED BY ({sc}) "
-            f"INTO {num_buckets} BUCKETS LOCATION '{path}'"
-        )
-    return spark.table(table)
-
-
 def co_bucketed_join(
     spark: SparkSession,
     left_table: str,

@@ -46,18 +46,9 @@ def main() -> None:
     ap.add_argument("--salt-threshold", type=int, default=50_000)
     ap.add_argument("--salt-buckets", type=int, default=8)
     ap.add_argument("--tiles", action="store_true", help="also write per-cell tile counts")
-    ap.add_argument(
-        "--plan",
-        choices=["levelwise", "subtree", "auto"],
-        default="auto",
-        help="physical mining plan: level-wise, Algorithm-3 per-subtree "
-        "(concurrent feature-rooted loops), or auto (measured-best by "
-        "input size; on --resume follows the existing checkpoint layout). "
-        "Both plans support --checkpoint-dir/--resume.",
-    )
     args = ap.parse_args()
     if args.resume and not args.checkpoint_dir:
-        # without manifests to read, every plan would silently remine
+        # without manifests to read, the miner would silently remine
         # from scratch — refuse loudly instead
         ap.error("--resume requires --checkpoint-dir")
 
@@ -107,15 +98,7 @@ def main() -> None:
     instances = instances.persist()
     n_instances = instances.count()
     t0 = time.time()
-    miner = eng.ColocationMiner(spark, cfg)
-    if args.plan == "subtree":
-        res = miner.mine_subtrees(instances, resume=args.resume)
-    elif args.plan == "auto":
-        res = miner.mine_auto(
-            instances, resume=args.resume, n_instances=n_instances
-        )
-    else:
-        res = miner.mine(instances, resume=args.resume)
+    res = eng.ColocationMiner(spark, cfg).mine(instances, resume=args.resume)
     wall = time.time() - t0
 
     os.makedirs(args.output, exist_ok=True)
@@ -158,7 +141,7 @@ def main() -> None:
         # reference-parity block so diffs against results.txt stay aligned)
         f.write("----------------------------------------\n")
         f.write(f"neighbor_pairs={res.pair_count}\n")
-        f.write(f"delta={res.delta:.5f}\nplan={args.plan}\n")
+        f.write(f"delta={res.delta:.5f}\n")
     print(
         f"mined {len(rendered)} patterns from {n_instances} instances "
         f"({res.pair_count} pairs) in {wall:.1f}s -> {args.output}"
